@@ -57,9 +57,9 @@ object CdcIngest {
       maxFileRows: Long = 0L,
       // Merge-on-read trickle commits (Iceberg v2 equality-delete analog):
       // instead of rewriting every touched bucket's files, a trickle batch
-      // writes ONLY its changed rows (new data files) plus their keys as
-      // equality-delete files; readers anti-join the (small, broadcast)
-      // delete keys against older data files, and compaction folds the
+      // writes ONLY its changed rows, and those delta files double as the
+      // commit's equality-delete key set; readers anti-join the (small,
+      // broadcast) keys against older data files, and compaction folds the
       // deltas back to pure base. At 100 TB this turns a 1000-event batch
       // touching 500 buckets from a ~500-bucket rewrite into ~1000 rows of
       // writes — the write-amplification lever; the read-time cost is one
@@ -815,11 +815,12 @@ object CdcIngest {
     /** write bucket-partitioned files; relies on merge inputs being
       * repartition(numBuckets, url)-aligned so `_bucket == partition id`
       * and NO post-join shuffle is needed. */
-    def writeMerged(merged: DataFrame, newVersion: Long): Seq[DataFileEntry] = {
+    def writeMerged(merged: DataFrame, newVersion: Long,
+        bloomNdv: Long = RowGroupBloomNdv): Seq[DataFileEntry] = {
       val tmpDir = table.root.resolve(s".tmp-${java.util.UUID.randomUUID()}")
       val w = withUrlBloom(merged
         .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(numBuckets))
-        .write).partitionBy(LakeTable.BucketCol).mode("overwrite")
+        .write, bloomNdv).partitionBy(LakeTable.BucketCol).mode("overwrite")
       withMicrosTimestamps(spark) {
         (if (config.maxFileRows > 0)
            w.option("maxRecordsPerFile", config.maxFileRows)
@@ -907,48 +908,38 @@ object CdcIngest {
           val src = alignToRenames(winners.drop("_n", LakeTable.BucketCol))
           val (files, carriedFiles, carriedDels2, newDels2, strategy) =
             if (mor) {
-              // ---- merge-on-read: write ONLY the rows the batch changed,
-              // plus their keys as equality-delete files; every existing
-              // file (data and delete) carries over by reference ----
+              // ---- merge-on-read: write ONLY the rows the batch changed;
+              // every existing file carries over by reference. The url bloom
+              // is sized to a delta file: ~2× the winners per touched bucket
+              val winnerRows = stats.map(_.getAs[Long]("winners")).sum
+              val deltaNdv = math.max(MinDeltaBloomNdv,
+                2L * winnerRows / math.max(1, touched.size))
               val changed = morChangedRows(src, target, dataCols)
-                .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(numBuckets))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-              try {
-                // The delete-file write is independent of the data-file
-                // write once `changed` is cached — submit it from a driver
-                // thread so its tasks back-fill the data write's tail
-                // (guide §2.6 "overlap independent jobs") instead of
-                // paying two sequential job barriers per trickle commit.
-                // The DV broadcast-size decision used the data files' row
-                // count, which would re-serialize the dependency: the
-                // batch's winner count from the already-collected stats
-                // is an upper bound on changed rows — a conservative
-                // stand-in for the same broadcast heuristic.
-                import scala.concurrent.{Await, Future}
-                import scala.concurrent.duration.Duration
-                import scala.concurrent.ExecutionContext.Implicits.global
-                val changedRowsHint = stats.map(_.getAs[Long]("winners")).sum
-                val delFut: Future[Seq[graft.lake.DeleteFileEntry]] = Future {
-                  if (config.deleteVectors)
-                    writeDeletionVectors(
-                      spark, table, snap, changed, touched, numBuckets,
-                      newVersion, changedRowsHint, wapTag)
-                  else {
-                    val delTmp = table.root.resolve(
-                      s".tmp-del-${java.util.UUID.randomUUID()}")
-                    changed.select(col("url"), col(LakeTable.BucketCol))
-                      .write.partitionBy(LakeTable.BucketCol).mode("overwrite")
-                      .parquet(delTmp.toString)
-                    moveDataFiles(spark, table, delTmp, newVersion, s"$wapTag-del")
-                      .map(f => graft.lake.DeleteFileEntry(
-                        f.path, f.bucket, f.rows, f.sizeBytes, newVersion))
-                  }
-                }
-                val dataFiles = writeMerged(changed, newVersion)
-                val delFiles = Await.result(delFut, Duration.Inf)
-                (dataFiles, snap.files, snap.deleteFiles, delFiles,
-                  if (config.deleteVectors) "mor-dv" else "mor")
-              } finally changed.unpersist()
+              if (config.deleteVectors) {
+                val cached = changed.persist(StorageLevel.MEMORY_AND_DISK)
+                try {
+                  // the vector write overlaps the data write from a second
+                  // thread so its tasks back-fill the data write's tail; the
+                  // winner count bounds the changed rows for its broadcast
+                  import scala.concurrent.{Await, Future}
+                  import scala.concurrent.duration.Duration
+                  import scala.concurrent.ExecutionContext.Implicits.global
+                  val dvFut = Future(writeDeletionVectors(
+                    spark, table, snap, cached, touched, numBuckets,
+                    newVersion, winnerRows, wapTag))
+                  val dataFiles = writeMerged(cached, newVersion, deltaNdv)
+                  (dataFiles, snap.files, snap.deleteFiles,
+                    Await.result(dvFut, Duration.Inf), "mor-dv")
+                } finally cached.unpersist()
+              } else {
+                // a delta file holds exactly the commit's changed keys, so it
+                // is also the commit's equality-delete file (read url-only;
+                // `_dv > _av` keeps it from hiding its own rows)
+                val dataFiles = writeMerged(changed, newVersion, deltaNdv)
+                (dataFiles, snap.files, snap.deleteFiles,
+                  dataFiles.map(f => graft.lake.DeleteFileEntry(
+                    f.path, f.bucket, f.rows, f.sizeBytes, newVersion)), "mor")
+              }
             } else {
               val fs = writeMerged(mergeLww(src, target, dataCols), newVersion)
               // the rewrite folded the touched buckets' deltas into base
@@ -1523,14 +1514,19 @@ object CdcIngest {
     * row-group-level twin of the manifest's bucket planning. parquet-mr
     * evaluates blooms during its row-group filtering, so nothing is needed
     * on the read side. NDV is sized to the ROW GROUP (the bloom's scope),
-    * not the table: a ~128 MB row group of pages holds low-10^5 urls.
-    * Equality-delete files are NOT bloomed — they are always read whole
-    * (no residual key filter), so a bloom there is pure write cost. */
+    * not the table: a ~128 MB row group of pages holds low-10^5 urls
+    * ([[RowGroupBloomNdv]]). A merge-on-read delta file is far smaller and
+    * is also read as its commit's equality-delete key set, bloom included,
+    * so that write passes an ndv derived from the batch's winner count. */
   private def withUrlBloom(
-      w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])
+      w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
+      ndv: Long = RowGroupBloomNdv)
       : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
     w.option("parquet.bloom.filter.enabled#url", "true")
-      .option("parquet.bloom.filter.expected.ndv#url", "100000")
+      .option("parquet.bloom.filter.expected.ndv#url", ndv.toString)
+
+  private val RowGroupBloomNdv = 100000L
+  private val MinDeltaBloomNdv = 128L
 
   private def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.parquet.outputTimestampType"

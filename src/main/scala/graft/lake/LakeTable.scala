@@ -39,7 +39,9 @@ final case class DataFileEntry(path: String, bucket: Int, rows: Long, sizeBytes:
 /** A merge-on-read delete file, in one of two formats:
   *
   *   - `kind = "equality"` (Iceberg v2 equality-delete analog): a parquet
-  *     file of `url` keys. At read time it removes matching keys from every
+  *     file read for its `url` keys only — the ingest writer records a MoR
+  *     commit's own delta data files here, so one path can be both a data
+  *     and a delete entry. At read time it removes matching keys from every
   *     data file with a STRICTLY OLDER `addedVersion` — the same commit's
   *     own data file (equal version) is exempt, so a MoR commit's new
   *     winners survive their own delete keys. Legacy data files parse with
@@ -494,9 +496,10 @@ final class LakeTable(val root: Path) {
     val committedSnaps = listVersions().map(readSnapshot)
     val committedRefs = committedSnaps
       .flatMap(s => s.files.map(_.path) ++ s.deleteFiles.map(_.path)).toSet
+    // a MoR delta path is listed as both a data and a delete entry
     val added = (snap.files.filter(_.addedVersion == snap.version).map(_.path) ++
       snap.deleteFiles.filter(_.addedVersion == snap.version).map(_.path))
-      .filterNot(committedRefs.contains)
+      .distinct.filterNot(committedRefs.contains)
     // the candidate's own manifests go too — but content-addressed
     // manifests for UNTOUCHED buckets are shared with the parent and stay
     val committedMans = committedSnaps.flatMap(_.manifests.map(_.path)).toSet
@@ -776,7 +779,10 @@ final class LakeTable(val root: Path) {
     * "how deep is the delete stack?", "what does the zone-map coverage
     * look like?" with plain SQL instead of reading 100 TB. The DuckDB
     * oracle parses the same snapshot JSON independently, so the commit
-    * protocol's on-disk contract itself sits under the driver's hash gate. */
+    * protocol's on-disk contract itself sits under the oracle's hash check.
+    * A merge-on-read delta file is its commit's equality-delete file too,
+    * so a `delete` row may share its path and size with a `data` row:
+    * `size_bytes` does not add up across kinds. */
   def filesDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val s = currentSnapshot()

@@ -503,8 +503,9 @@ object SystemQueries {
     val root = java.nio.file.Paths.get(MetaRoot)
     val marker = root.resolve("_graft_spec")
     // v2: sharded-manifest snapshot format (manifest list + per-bucket
-    // manifest files) — regenerate the fixed-path table on format change
-    val sig = s"$CdcSpec|buckets=$CdcBuckets|mor-meta-v2"
+    // manifest files); v3: MoR delta data files are their own equality
+    // deletes — regenerate the fixed-path table on format change
+    val sig = s"$CdcSpec|buckets=$CdcBuckets|mor-meta-v3"
     if (Files.exists(marker) &&
         new String(Files.readAllBytes(marker), "UTF-8") == sig)
       return LakeTable.load(root.resolve("table").toString)
@@ -580,7 +581,7 @@ object SystemQueries {
 
   /** Same final-state contract through MERGE-ON-READ trickle commits
     * (Iceberg v2 equality-delete analog): after the first bulk load every
-    * batch writes only its changed rows plus equality-delete keys, and the
+    * batch writes only its changed rows (their own equality deletes), and the
     * read path must reconstruct the identical visible state through the
     * stacked delta anti-joins — hash-checked against the SAME DuckDB LWW
     * oracle as the rewrite replay. A half-way compaction folds the first

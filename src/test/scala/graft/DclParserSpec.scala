@@ -7,13 +7,14 @@ import org.apache.spark.sql.types._
 import graft.codec.Ccsid
 import graft.schema.DclParser
 
-/** DCLGEN parsing over the reference's real fixtures
-  * (the .dcl files under /root/reference/db2/dcl, capability of
+/** DCLGEN parsing over two IBM-layout DCLGEN fixtures on the test
+  * classpath (`dcl/DCLTRCAT.dcl`, `dcl/DCLTRTYP.dcl`; capability of
   * dcl_parser.py:169-260) and the CCSID→charset registry
   * (encoding.py:19-40 parity). */
 class DclParserSpec extends AnyFunSuite {
 
-  private val dclDir = "/root/reference/db2/dcl"
+  private val dclDir = java.nio.file.Paths.get(
+    getClass.getResource("/dcl/DCLTRCAT.dcl").toURI).getParent.toString
 
   test("DCLTRCAT: DECLARE columns, schema split, column count") {
     val r = DclParser.parseFile(s"$dclDir/DCLTRCAT.dcl")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.feed.{FeedGen, FeedSpec}
@@ -8,9 +10,11 @@ import graft.ingest.CdcIngest.IngestConfig
 import graft.lake.LakeTable
 
 /** Merge-on-read trickle commits (Iceberg v2 equality-delete analog):
-  * changed-rows-only writes + equality-delete files, delete-aware reads
-  * through every reader built on readRaw, compaction folding the deltas,
-  * and the write-amplification bound that motivates the whole feature. */
+  * changed-rows-only writes whose delta data files are also the commit's
+  * equality-delete entries (same path, bucket and rows — so `filesDf` may
+  * list one path as both `data` and `delete`), delete-aware reads through
+  * every reader built on readRaw, compaction folding the deltas, and the
+  * write-amplification bound that motivates the whole feature. */
 class MergeOnReadSpec extends SparkTestBase {
 
   /** Heavy-churn feed: many updates/deletes per url, so MoR deltas stack. */
@@ -88,15 +92,16 @@ class MergeOnReadSpec extends SparkTestBase {
     // files: one row per manifest entry, data + delete, field-for-field
     val rows = table.filesDf(spark).collect()
     assert(rows.length == snap.files.size + snap.deleteFiles.size)
-    val byPath = rows.map(r => r.getString(1) -> r).toMap
+    // keyed by (kind, path): a MoR delta path is both a data and a delete row
+    val byPath = rows.map(r => (r.getString(0), r.getString(1)) -> r).toMap
     snap.files.foreach { f =>
-      val r = byPath(f.path)
+      val r = byPath(("data", f.path))
       assert(r.getString(0) == "data" && r.getLong(2) == f.bucket &&
         r.getLong(3) == f.rows && r.getLong(5) == f.addedVersion)
       assert(Option(r.get(6)).map(_.asInstanceOf[Long]) == f.tsMinMicros)
     }
     snap.deleteFiles.foreach { d =>
-      val r = byPath(d.path)
+      val r = byPath(("delete", d.path))
       assert(r.getString(0) == "delete" && r.getLong(3) == d.rows &&
         r.getLong(5) == d.addedVersion && r.isNullAt(6))
     }
@@ -106,6 +111,45 @@ class MergeOnReadSpec extends SparkTestBase {
     assert(hist.map(_.getString(9)).toSeq.drop(1) ==
       "bulk" +: Seq.fill(hist.length - 2)("mor"))
     assert(hist.last.getLong(8) ==  snap.deleteFiles.map(_.rows).sum)
+  }
+
+  test("a MoR commit's delete entries are its own delta files; maintenance leaves no debris") {
+    val feed = tmpDir("morcontract")
+    FeedGen.writeSegments(spec, feed)
+    val table = LakeTable.create(tmpDir("morcontracttbl"), CdcIngest.PagesSchemaV1, 8)
+    val cfg = IngestConfig(numBuckets = 8, segmentsPerBatch = 1, mergeOnRead = true)
+    def debris(): Seq[String] = {
+      val st = java.nio.file.Files.walk(table.root)
+      try st.iterator().asScala.map(p => table.root.relativize(p).toString)
+        .filter(rel => rel.contains("-del-") || rel.split('/').exists(_.startsWith(".tmp-")))
+        .toSeq
+      finally st.close()
+    }
+    val morCommits = CdcIngest.listSegments(feed).map { sg =>
+      val snap = CdcIngest.applyBatch(spark, table, Seq(sg), cfg)
+      assert(debris().isEmpty, s"v${snap.version} left side files behind")
+      val isMor = snap.metrics("strategy") == "mor"
+      if (isMor) {
+        val newData = snap.files.filter(_.addedVersion == snap.version)
+          .map(f => (f.path, f.bucket, f.rows))
+        val newDels = snap.deleteFiles.filter(_.addedVersion == snap.version)
+          .map(d => (d.path, d.bucket, d.rows))
+        assert(newData.nonEmpty && newDels.sorted == newData.sorted,
+          s"v${snap.version}: delete entries must be exactly the new data files")
+      }
+      isMor
+    }.count(identity)
+    assert(morCommits >= 2)
+    CdcIngest.compact(spark, table)
+    table.expireSnapshots(1)
+    // gc has nothing to sweep: expiry removed every path it unreferenced
+    assert(table.orphanFiles().isEmpty && table.orphanManifests().isEmpty)
+    val live = table.currentSnapshot()
+    (live.files.map(_.path) ++ live.deleteFiles.map(_.path)).foreach(p =>
+      assert(java.nio.file.Files.exists(table.root.resolve(p)), s"live $p is gone"))
+    assert(debris().isEmpty)
+    val expected = FeedGen.expectedState(FeedGen.events(spec))
+    assert(state(table) == expected.values.map(e => (e.url, e.warcTs, e.text, e.lang)).toSet)
   }
 
   test("streaming front-end replays MoR trickle commits to the serial oracle") {

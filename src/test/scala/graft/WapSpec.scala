@@ -79,6 +79,21 @@ class WapSpec extends SparkTestBase {
     assert(table.currentSnapshot().watermarkSegment == 1L)
   }
 
+  test("discarding a staged MoR candidate deletes and reports each path once") {
+    val (table, feed) = setup()
+    val staged = CdcIngest.stageNext(spark, table, feed,
+      IngestConfig(numBuckets = 8, segmentsPerBatch = 1, mergeOnRead = true)).get
+    assert(staged.metrics("strategy") == "mor")
+    val addedPaths = (staged.files.filter(_.addedVersion == staged.version).map(_.path) ++
+      staged.deleteFiles.filter(_.addedVersion == staged.version).map(_.path)).distinct
+    assert(addedPaths.nonEmpty)
+    val dropped = table.discardStaged()
+    assert(dropped.map(_.toString).sorted ==
+      addedPaths.map(p => table.root.resolve(p).toString).sorted)
+    addedPaths.foreach(p => assert(!java.nio.file.Files.exists(table.root.resolve(p))))
+    assert(table.orphanFiles().isEmpty, "discard must leave no orphans")
+  }
+
   test("publish refuses when the table advanced past the candidate's parent") {
     val (table, feed) = setup()
     CdcIngest.stageNext(spark, table, feed,
