@@ -81,6 +81,9 @@ object MainIngest {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // set before the context starts, so its startup INFO lines are
+      // suppressed too (a setLogLevel after getOrCreate comes too late)
+      .config("spark.log.level", "WARN")
     // local-cluster[N,c,mem] mode: separate executor JVMs need the repo
     // classes on their classpath (and module opens on JDK 17)
     sys.env.get("SPARK_GRAFT_EXEC_CP").foreach { cp =>
@@ -114,7 +117,6 @@ object MainIngest {
       val salt = rest.drop(1).headOption.map(_.toInt).getOrElse(16)
       val maxFileRows = rest.drop(2).headOption.map(_.toLong).getOrElse(0L)
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val before = table.currentSnapshot()
       val t0 = System.nanoTime()
@@ -142,7 +144,6 @@ object MainIngest {
       val ckpt = rest.headOption
       val mv = rest.drop(1).headOption
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = graft.lake.LakeTable.load(tableDir)
       val cfg = IngestConfig(numBuckets = table.currentSnapshot().numBuckets,
         mergeOnRead = mor, deleteVectors = dv)
@@ -191,7 +192,6 @@ object MainIngest {
         sys.exit(2)
       }
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val cur = table.currentSnapshot()
       val before = cur.files.size
@@ -223,7 +223,6 @@ object MainIngest {
     case "rebucket" :: tableDir :: newBuckets :: rest =>
       val maxFileRows = rest.headOption.map(_.toLong).getOrElse(0L)
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val before = table.currentSnapshot().numBuckets
       val snap = CdcIngest.rebucket(spark, table, newBuckets.toInt, maxFileRows)
@@ -244,7 +243,6 @@ object MainIngest {
     // manifest-planned point lookup: opens only the keys' buckets' files
     case "lookup" :: tableDir :: url :: more =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val keys = url :: more
       val planned = table.lookupFiles(table.currentSnapshot(), keys)
@@ -259,7 +257,6 @@ object MainIngest {
     // the table (the "last week's pages" read path at 100 TB)
     case "slice" :: tableDir :: fromIso :: toIso :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       def micros(iso: String): Long = {
         val i = java.time.Instant.parse(iso)
@@ -279,7 +276,6 @@ object MainIngest {
     // through that snapshot's own schema (Iceberg VERSION AS OF analog)
     case "asof" :: tableDir :: ref :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val version = table.resolveVersion(ref) // version number or tag name
       requireVersions(table, version)
@@ -294,7 +290,6 @@ object MainIngest {
     // publish or discard — a quality gate with no bad version ever served
     case "stage" :: tableDir :: feedDir :: rest =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val cfg = IngestConfig(numBuckets = table.currentSnapshot().numBuckets,
         segmentsPerBatch = rest.headOption.map(_.toInt).getOrElse(5))
@@ -308,7 +303,6 @@ object MainIngest {
 
     case "audit" :: tableDir :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val errs = graft.ingest.CdcIngest.auditStaged(spark, table)
       if (errs.isEmpty) println("audit PASSED — publish to serve it")
@@ -333,7 +327,6 @@ object MainIngest {
     // pruning ratio so the clustering payoff is visible operationally
     case "where" :: tableDir :: column :: lo :: hi :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val snap = table.currentSnapshot()
       if (!snap.schema.fieldNames.contains(column)) {
@@ -433,7 +426,6 @@ object MainIngest {
     // reading only buckets whose file sets changed (table_changes analog)
     case "changes" :: tableDir :: fromV :: toV :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       requireVersions(table, fromV.toLong, toV.toLong)
       val df = table.changesBetween(spark, fromV.toLong, toV.toLong)
@@ -524,7 +516,6 @@ object MainIngest {
     case "mview" :: tableDir :: mvRoot :: Nil =>
       import graft.lake.MaterializedView
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       MaterializedView.appliedVersion(mvRoot) match {
         case None =>
@@ -543,7 +534,6 @@ object MainIngest {
     // shape incremental consumers (downstream MV maintenance) subscribe to
     case "deltas" :: tableDir :: fromV :: toV :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       requireVersions(table, fromV.toLong, toV.toLong)
       val df = table.changeDeltas(spark, fromV.toLong, toV.toLong)
@@ -564,7 +554,6 @@ object MainIngest {
         case _ => Exporter.Json
       }
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val r = Exporter.export(spark, table.read(spark), outDir, fmt, "pages",
         withChecksums = rest.contains("--checksums"))
@@ -584,7 +573,6 @@ object MainIngest {
         sys.exit(1)
       }
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val results = Registry.runAll(spark, reg, manifestPath = rest.headOption)
       results.foreach { r =>
         val v = r.countValidation.map(c =>
@@ -672,21 +660,18 @@ object MainIngest {
     // data-file IO, so both are instant even on a huge table
     case "files" :: tableDir :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       table.filesDf(spark).orderBy("kind", "bucket", "path").show(10000, false)
       spark.stop()
 
     case "history" :: tableDir :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       table.snapshotsDf(spark).orderBy("version").show(10000, false)
       spark.stop()
 
     case "show" :: tableDir :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
       val table = LakeTable.load(tableDir)
       val snap = table.currentSnapshot()
       println(s"snapshot v${snap.version} batch=${snap.batchId} " +

@@ -110,10 +110,6 @@ object RecordCodec {
     ChangeEvent(op, seq, url, ts, html, text, lang, schemaVersion, fetchStatus, contentLen)
   }
 
-  /** Key-only peek: (schemaVersion, op, seq, tsMicros, url) without
-    * materializing text/html — the dedup pass runs on this plus the raw
-    * record bytes ("late materialization": only LWW winners get a full
-    * decode, losers never allocate their payloads). */
   /** Record start/length offsets inside a framed segment — zero-copy walk
     * (the record slice is only materialized for rows that survive
     * filtering; the key pass never copies payloads at all). */
@@ -186,30 +182,6 @@ object RecordCodec {
     val urlLen = buf.getShort() & 0xffff
     val urlBytes = new Array[Byte](urlLen); buf.get(urlBytes)
     (seq, tsMicros, urlBytes)
-  }
-
-  /** Narrower peek for the key-dedup pass: (seq, tsMicros, EBCDIC url
-    * bytes — grouping on raw key bytes skips the charset decode for rows
-    * that will lose LWW anyway). */
-  def peekKeyBytes(bytes: Array[Byte]): (Long, Long, Array[Byte]) = {
-    val buf = ByteBuffer.wrap(bytes)
-    buf.get(); buf.get() // schemaVersion, op
-    val seq = buf.getLong()
-    val tsMicros = buf.getLong()
-    val urlLen = buf.getShort() & 0xffff
-    val urlBytes = new Array[Byte](urlLen); buf.get(urlBytes)
-    (seq, tsMicros, urlBytes)
-  }
-
-  def peekKey(bytes: Array[Byte]): (Int, String, Long, Long, String) = {
-    val buf = ByteBuffer.wrap(bytes)
-    val sv = buf.get().toInt
-    val op = buf.get().toChar.toString
-    val seq = buf.getLong()
-    val tsMicros = buf.getLong()
-    val urlLen = buf.getShort() & 0xffff
-    val urlBytes = new Array[Byte](urlLen); buf.get(urlBytes)
-    (sv, op, seq, tsMicros, MainframeNum.ebcdicToString(urlBytes))
   }
 
   private def readLenPrefixed(buf: ByteBuffer): Option[Array[Byte]] = {

@@ -1,7 +1,7 @@
 package graft.codec
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -133,10 +133,19 @@ object RecordDecodeExpr {
         UTF8String.fromString(langRaw), sv, fetchStatus, contentLen))
   }
 
-  /** Register `decode_record` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "decode_record",
-      { exprs => RecordDecodeExpr(exprs.head) },
-      "scala_udf")
+  /** Register `decode_record` in the session's function registry unless
+    * it is already there (ingest calls this on every trickle commit). The
+    * builder rejects any argument count other than 1 with an analysis
+    * error. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("decode_record")))
+      registry.createOrReplaceTempFunction("decode_record", {
+        case Seq(rec) => RecordDecodeExpr(rec)
+        case exprs => throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+          Map("functionName" -> "`decode_record`", "expectedNum" -> "1",
+            "actualNum" -> exprs.size.toString,
+            "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+      }, "scala_udf")
+  }
 }

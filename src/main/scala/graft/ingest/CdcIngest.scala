@@ -1,9 +1,9 @@
 package graft.ingest
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -15,13 +15,14 @@ import graft.model.ChangeEvent
 /** The CDC / incremental-ingest engine (north rule core; SURVEY.md §7.1 #5).
   *
   * Per micro-batch of WAL segments:
-  *  1. decode — binary segments → typed `Dataset[ChangeEvent]` (Dataset.map,
-  *     JVM-native; replaces the reference's Python UDF decode,
-  *     encoding.py:279-306);
-  *  2. in-batch LWW dedup — two-phase salted aggregation: phase 1 groups by
-  *     (url, salt) with map-side partial aggregation (hot-domain skew is
-  *     reduced before the shuffle), phase 2 groups by url; winner = max_by
-  *     (warc_ts, seq) — SURVEY.md §2.6;
+  *  1. decode — one segment scan (one task per segment, capped) feeds the
+  *     native Catalyst `decode_record` expression (codegen'd, JVM-native;
+  *     replaces the reference's Python UDF decode, encoding.py:279-306);
+  *  2. in-batch LWW dedup, winner = max_by (warc_ts, seq) — SURVEY.md §2.6.
+  *     A trickle batch runs [[lwwDedup]]: phase 1 groups by (url, salt)
+  *     with map-side partial aggregation (hot-domain skew is reduced before
+  *     the shuffle), phase 2 groups by url. A bulk batch decides winners on
+  *     a key-only pass and decodes only them ([[dedupViaKeyBroadcast]]);
   *  3. additive schema evolution — v2 records promote `extra` entries to
   *     typed columns; the table schema widens, old rows read as null
   *     (schema_validator.py:116-128 promotion semantics);
@@ -93,98 +94,51 @@ object CdcIngest {
   final class CrashInjected extends RuntimeException("injected crash before commit")
 
   // -------------------------------------------------------------------
-  // 1. decode
+  // 1. segment scan + decode
   // -------------------------------------------------------------------
 
-  def decodeSegments(spark: SparkSession, segmentPaths: Seq[String]): Dataset[ChangeEvent] = {
-    import spark.implicits._
-    // NOT spark.read.format("binaryFile"): that source packs small segment
-    // files into 128MB partitions (spark.sql.files.maxPartitionBytes), which
-    // serializes decode for typical WAL segment sizes and destroys scaling.
-    // Instead distribute the path list — one task per segment (capped) —
-    // and read through the Hadoop FS API so any Spark-supported filesystem
-    // works. Decode parallelism = #segments in the batch.
-    val parallelism = math.min(segmentPaths.size,
-      spark.sparkContext.defaultParallelism * 4)
+  /** The one segment fan-out every ingest read runs on. NOT
+    * spark.read.format("binaryFile"): that source packs small segment
+    * files into 128MB partitions (spark.sql.files.maxPartitionBytes), which
+    * serializes decode for typical WAL segment sizes and destroys scaling.
+    * Instead the path list is distributed — by default one task per
+    * segment, capped at 4x the cluster width — and each task reads its
+    * segments through the Hadoop FS API (any Spark-supported filesystem)
+    * via the executor-local [[SegmentCache]] (`retain` as there). `read`
+    * gets one task's (path, bytes) pairs, lazily. */
+  private def segmentScan[T: Encoder](
+      spark: SparkSession,
+      segmentPaths: Seq[String],
+      tasks: Option[Int] = None,
+      retain: Boolean = false)(
+      read: Iterator[(String, Array[Byte])] => Iterator[T]): Dataset[T] = {
+    val n = tasks.getOrElse(
+      math.min(segmentPaths.size, spark.sparkContext.defaultParallelism * 4))
     val confBc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
         spark.sessionState.newHadoopConf()))
-    spark.createDataset(segmentPaths)
-      .repartition(math.max(parallelism, 1))
-      .flatMap(p => RecordCodec.decodeSegment(readFile(p, confBc.value.value)))
+    spark.createDataset(segmentPaths)(Encoders.STRING)
+      .repartition(math.max(1, n))
+      .mapPartitions(ps => read(ps.map(p =>
+        (p, SegmentCache.bytes(p, confBc.value.value, retain)))))
   }
 
-  /** Decoded events as a DataFrame with lake column names — decodes via the
-    * native Catalyst `decode_record` expression (codegen'd; no ChangeEvent
-    * object, no Encoder round-trip — [[graft.codec.RecordDecodeExpr]]). */
+  /** Decode a frame's `rec` column with the native Catalyst
+    * `decode_record` expression (codegen'd; no ChangeEvent object, no
+    * Encoder round-trip — [[graft.codec.RecordDecodeExpr]]) into the lake
+    * event columns; the frame's other columns are dropped. */
+  private def decodeRecords(recs: DataFrame): DataFrame = {
+    graft.codec.RecordDecodeExpr.register(recs.sparkSession)
+    recs.select(expr("decode_record(rec)").as("e")).select(col("e.*"))
+  }
+
+  /** Every event of the segments, decoded, with lake column names. Each
+    * record is CRC-verified as the segment is read
+    * ([[RecordCodec.readSegment]]). */
   def eventsDf(spark: SparkSession, segmentPaths: Seq[String]): DataFrame = {
     import spark.implicits._
-    graft.codec.RecordDecodeExpr.register(spark)
-    val parallelism = math.max(1, math.min(segmentPaths.size,
-      spark.sparkContext.defaultParallelism * 4))
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    spark.createDataset(segmentPaths)
-      .repartition(parallelism)
-      .flatMap(p => RecordCodec.readSegment(
-        SegmentCache.bytes(p, confBc.value.value, retain = false)))
-      .toDF("rec")
-      .select(expr("decode_record(rec)").as("e"))
-      .select(col("e.*"))
-  }
-
-  /** Key fields + the raw record ("late materialization" row — see
-    * RecordCodec.peekKey). Shuffling this instead of the fully decoded
-    * event roughly halves per-row bytes and cuts decode allocations ~10x
-    * for typical update-heavy feeds (losers are never materialized). */
-  final case class RawEvent(url: String, seq: Long, ts_micros: Long,
-      op: String, sv: Int, rec: Array[Byte])
-
-  /** Winner row after full decode, with the fold count carried through.
-    * NOT private: Janino-generated encoder code cannot access private
-    * nested classes and silently falls back to interpreted serialization
-    * (observed as CompileException warnings in the hot decode path). */
-  final case class FullWinner(
-      op: String, seq: Long, url: String, warc_ts: java.sql.Timestamp,
-      html: Array[Byte], text: String, lang: String, schema_version: Int,
-      fetch_status: Option[Int], content_len: Option[Long], _n: Long)
-
-  def decodeRaw(spark: SparkSession, segmentPaths: Seq[String]): Dataset[RawEvent] = {
-    import spark.implicits._
-    val parallelism = math.min(segmentPaths.size,
-      spark.sparkContext.defaultParallelism * 4)
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    spark.createDataset(segmentPaths)
-      .repartition(math.max(parallelism, 1))
-      .flatMap { p =>
-        val bytes = SegmentCache.bytes(p, confBc.value.value, retain = false)
-        RecordCodec.readSegment(bytes).map { rec =>
-          val (sv, op, seq, ts, url) = RecordCodec.peekKey(rec)
-          RawEvent(url, seq, ts, op, sv, rec)
-        }
-      }
-  }
-
-  /** Read segments and emit (seq, tsMicros, urlBytes) key rows only. */
-  private def decodeKeys(spark: SparkSession, segmentPaths: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val parallelism = math.max(1, math.min(segmentPaths.size,
-      spark.sparkContext.defaultParallelism * 4))
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    spark.createDataset(segmentPaths)
-      .repartition(parallelism)
-      .flatMap { p =>
-        val bytes = readFile(p, confBc.value.value)
-        RecordCodec.segmentOffsets(bytes).map { case (off, _) =>
-          RecordCodec.peekKeyBytesAt(bytes, off)
-        }
-      }
-      .toDF("seq", "ts_micros", "urlb")
+    decodeRecords(segmentScan(spark, segmentPaths)(
+      _.flatMap { case (_, bytes) => RecordCodec.readSegment(bytes) }).toDF("rec"))
   }
 
   private def readFile(p: String, conf: org.apache.hadoop.conf.Configuration): Array[Byte] = {
@@ -315,29 +269,23 @@ object CdcIngest {
     // ONE task regardless of cluster size. The floor keeps small batches
     // parallel while large batches stay data-bounded (shuffle volume
     // invariant across cluster sizes — the scaling property that matters).
-    val parallelism = math.max(1, math.max(
+    val tasks = math.max(
       (segmentPaths.size + segmentsPerTask - 1) / segmentsPerTask,
-      math.min(segmentPaths.size, spark.sparkContext.defaultParallelism)))
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    spark.createDataset(segmentPaths)
-      .repartition(parallelism)
-      .mapPartitions { paths =>
-        val combiner = new KeyCombiner()
-        paths.foreach { p =>
-          val bytes = SegmentCache.bytes(p, confBc.value.value, retain = true)
-          RecordCodec.segmentOffsets(bytes).foreach { case (off, _) =>
-            combiner.add(
-              RecordCodec.urlHashAt(bytes, off, 42L),
-              RecordCodec.urlHashAt(bytes, off, 0x9747b28cL),
-              RecordCodec.tsMicrosAt(bytes, off),
-              RecordCodec.seqAt(bytes, off),
-              RecordCodec.svAt(bytes, off))
-          }
+      math.min(segmentPaths.size, spark.sparkContext.defaultParallelism))
+    segmentScan(spark, segmentPaths, Some(tasks), retain = true) { segs =>
+      val combiner = new KeyCombiner()
+      segs.foreach { case (_, bytes) =>
+        RecordCodec.segmentOffsets(bytes).foreach { case (off, _) =>
+          combiner.add(
+            RecordCodec.urlHashAt(bytes, off, 42L),
+            RecordCodec.urlHashAt(bytes, off, 0x9747b28cL),
+            RecordCodec.tsMicrosAt(bytes, off),
+            RecordCodec.seqAt(bytes, off),
+            RecordCodec.svAt(bytes, off))
         }
-        combiner.result
       }
+      combiner.result
+    }
   }
 
   /** Broadcast winner-seq membership filter. */
@@ -403,28 +351,27 @@ object CdcIngest {
     }
   }
 
-  /** Fastest bulk dedup: LWW winners are decided on a key-only pass (the
+  /** Bulk dedup: LWW winners are decided on a key-only pass (the
     * map-side [[KeyCombiner]] — zero per-event allocation, shuffle volume
     * bounded by per-task distinct urls), the winner seq-set (one entry per
     * url in the batch) is collected to the driver and broadcast, and the
     * payload pass filters records by seq BEFORE copying or decoding them —
-    * losers never materialize anywhere. The winner COUNT is known exactly
-    * from the persisted key aggregation before anything is collected
-    * (round-1's bytes/40 estimate could under-trigger); above
-    * `maxCollectedKeys` the winner seqs go to a temp parquet and the
-    * payload pass joins against it instead of a driver LongSet — the key
-    * aggregation is never recomputed. Segment bytes are read once per pass
-    * at most: the key pass populates the executor-local [[SegmentCache]]
-    * and the payload pass consumes it.
-    * Returns (winners df, Some((events, minSeq, maxSeq)), max schema
-    * version seen in the batch — from the key rows, so the caller's
-    * evolution decision needs no driver-side segment reads). */
+    * losers never materialize anywhere. Above `maxCollectedKeys` winners
+    * the payload pass joins the events against the persisted key
+    * aggregation instead of a driver-side set — the key aggregation is
+    * never recomputed. Segment bytes are read once per pass at most: the
+    * key pass populates the executor-local [[SegmentCache]] and the
+    * payload pass consumes it.
+    * Returns (winners df, (events, minSeq, maxSeq), max schema version
+    * seen in the batch — from the key rows, so the caller's evolution
+    * decision needs no driver-side segment reads). The winners are
+    * HashPartitioning(url, urlPartitions). */
   def dedupViaKeyBroadcast(
       spark: SparkSession,
       segmentPaths: Seq[String],
       urlPartitions: Int,
       maxCollectedKeys: Int = 4000000,
-      segmentsPerKeyTask: Int = 25): (DataFrame, Option[(Long, Long, Long)], Int) = {
+      segmentsPerKeyTask: Int = 25): (DataFrame, (Long, Long, Long), Int) = {
     import spark.implicits._
     val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
     var tM = System.nanoTime()
@@ -480,177 +427,66 @@ object CdcIngest {
     }
     mk("keyjob+collect")
 
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    val parallelism = math.max(1, math.min(segmentPaths.size,
-      spark.sparkContext.defaultParallelism * 4))
-
-    /** payload pass: consume cached segment bytes, keep rows whose seq is
-      * in the broadcast winner set, decode only those. The broadcast is
-      * dereferenced INSIDE the task (a `set.contains` closure made on the
-      * driver would serialize the whole set into every task binary). */
-    def decodeWinners(setBc: org.apache.spark.broadcast.Broadcast[SeqFilter]): DataFrame =
-      spark.createDataset(segmentPaths)
-        .repartition(parallelism)
-        .flatMap { p =>
-          val bytes = SegmentCache.bytes(p, confBc.value.value, retain = false)
-          val keep = setBc.value
-          val hasCrc = RecordCodec.segmentHasCrc(bytes)
-          RecordCodec.segmentOffsets(bytes).flatMap { case (off, len) =>
-            // zero-copy: test the seq in place; only winners are decoded
-            if (!keep.contains(RecordCodec.seqAt(bytes, off))) None
-            else {
-              // integrity gate: no byte enters the table unverified
-              if (hasCrc && !RecordCodec.crcMatchesAt(bytes, off, len))
-                throw new RecordCodec.CorruptRecordException(
-                  s"winner record CRC mismatch in $p at offset $off")
-              val e = RecordCodec.decodeAt(bytes, off)
-              Some(FullWinner(e.op, e.seq, e.url, e.warcTs, e.html, e.text,
-                e.lang, e.schemaVersion, e.fetch_status, e.content_len, 1L))
-            }
-          }
-        }.toDF()
-
+    /** One row per url (at-least-once duplicates of a winner share its
+      * seq), clustered for the merge join. */
     def collapse(decoded: DataFrame): DataFrame = {
-      val payloadCols = decoded.columns.filterNot(c => c == "_n" || c == "url")
-      val payload = struct(payloadCols.map(col).toSeq: _*)
+      val payloadCols = decoded.columns.filterNot(_ == "url")
       decoded
         .repartition(urlPartitions, col("url"))
         .groupBy(col("url"))
-        .agg(max_by(payload, struct(col("warc_ts"), col("seq"))).as("_w"),
-          max(col("_n")).as("_n"))
-        .select(col("url") +: payloadCols.map(c => col(s"_w.$c").as(c)) :+ col("_n"): _*)
+        .agg(max_by(struct(payloadCols.map(col).toSeq: _*),
+          struct(col("warc_ts"), col("seq"))).as("_w"))
+        .select(col("url") +: payloadCols.map(c => col(s"_w.$c").as(c)).toSeq: _*)
     }
 
-    if (!overCap) {
+    val winners = if (!overCap) {
       // packed long[]s: 8 B/key transferred (vs ~100+ B for boxed tuple
       // rows: at 4M keys the driver transient drops from ~400 MB of
       // object churn to 32 MB of flat arrays), global totals folded from
       // #partitions subtotals — all already in hand from the fused job.
       winnerKeys.unpersist()
-      val filter = seqFilterOf(
-        packed.iterator.map(_._1).filter(_ != null).toSeq, nWinners, mn, mx)
-      val setBc = spark.sparkContext.broadcast(filter)
-      val winners = collapse(decodeWinners(setBc))
-      mk("plan-winners")
-      (winners, Some((ev, mn, mx)), maxSv)
+      val setBc = spark.sparkContext.broadcast(seqFilterOf(
+        packed.iterator.map(_._1).filter(_ != null).toSeq, nWinners, mn, mx))
+      // payload pass: test each seq in place against the broadcast set
+      // (dereferenced INSIDE the task — a `set.contains` closure made on
+      // the driver would serialize the whole set into every task binary)
+      // and copy out only the winners' record slices
+      collapse(decodeRecords(segmentScan(spark, segmentPaths)(_.flatMap {
+        case (p, bytes) =>
+          val keep = setBc.value
+          val hasCrc = RecordCodec.segmentHasCrc(bytes)
+          RecordCodec.segmentOffsets(bytes)
+            .filter { case (off, _) => keep.contains(RecordCodec.seqAt(bytes, off)) }
+            .map { case (off, len) =>
+              // integrity gate: no byte enters the table unverified
+              if (hasCrc && !RecordCodec.crcMatchesAt(bytes, off, len))
+                throw new RecordCodec.CorruptRecordException(
+                  s"winner record CRC mismatch in $p at offset $off")
+              java.util.Arrays.copyOfRange(bytes, off, off + len)
+            }
+      }).toDF("rec")))
     } else {
-      // huge-batch fallback: relational join of the raw events against the
-      // persisted winner-seq aggregation — bounded driver memory, key
-      // aggregation reused (stays cached until LRU eviction; at ~32B/row
-      // that is the price of not recomputing the key pass). Totals came
-      // from the fused job's subtotals — no extra aggregation job.
-      val raw = decodeRaw(spark, segmentPaths)
-      val winnersRaw = raw.join(winnerKeys.select(col("wseq")),
-        col("seq") === col("wseq"))
-      val decoded = winnersRaw.select(col("rec"), lit(1L).as("_n"))
-        .as[(Array[Byte], Long)].mapPartitions { it =>
-          it.map { case (rec, n) =>
-            val e = RecordCodec.decode(rec)
-            FullWinner(e.op, e.seq, e.url, e.warcTs, e.html, e.text, e.lang,
-              e.schemaVersion, e.fetch_status, e.content_len, n)
-          }
-        }.toDF()
-      val winners = collapse(decoded)
-      mk("plan-winners")
-      (winners, Some((ev, mn, mx)), maxSv)
+      // huge-batch fallback: relational join of the (CRC-verified) events
+      // against the persisted winner-seq aggregation — bounded driver
+      // memory, key aggregation reused (stays cached until LRU eviction;
+      // at ~32B/row that is the price of not recomputing the key pass)
+      val recs = segmentScan(spark, segmentPaths)(_.flatMap { case (_, bytes) =>
+        RecordCodec.readSegment(bytes).map(r => (RecordCodec.seqAt(r, 0), r))
+      }).toDF("seq", "rec")
+      collapse(decodeRecords(
+        recs.join(winnerKeys.select(col("wseq")), col("seq") === col("wseq"))))
     }
-  }
-
-  /** Shuffle-light LWW dedup for bulk batches:
-    *  1. key pass — only (urlBytes, seq, ts) rows go through the salted
-    *     two-phase max_by; the heavy payloads never enter this shuffle;
-    *  2. winner seqs (one per url; exact duplicates of the winning record
-    *     share its seq) broadcast back as a semi-join filter over a second
-    *     segment scan — loser payloads are dropped map-side and never
-    *     allocated beyond the raw record slice;
-    *  3. survivors get the full decode, one more (tiny) salted max_by per
-    *     url collapses at-least-once duplicates, repartitioned to the
-    *     bucket-aligned layout for the merge join.
-    * Output: full event columns + `_n`, HashPartitioning(url, urlPartitions). */
-  def dedupViaKeys(
-      spark: SparkSession,
-      segmentPaths: Seq[String],
-      salt: Int,
-      urlPartitions: Int): DataFrame = {
-    import spark.implicits._
-    val keys = decodeKeys(spark, segmentPaths)
-    val ord = struct(col("ts_micros"), col("seq"))
-    val phase1 = keys
-      .withColumn("_salt", pmod(col("seq"), lit(salt.toLong)))
-      .groupBy(col("urlb"), col("_salt"))
-      .agg(max_by(struct(col("ts_micros"), col("seq")), ord).as("_w"),
-        count(lit(1)).as("_n"))
-    val winnerSeqs = phase1
-      .groupBy(col("urlb"))
-      .agg(max_by(col("_w"), col("_w")).as("_w"), sum(col("_n")).as("_n"))
-      .select(col("_w.seq").as("wseq"), col("_n"))
-    val raw = decodeRaw(spark, segmentPaths)
-    val winners0 = raw.join(broadcast(winnerSeqs), col("seq") === col("wseq"))
-    // full decode of survivors FIRST (map-side, pre-shuffle), THEN the
-    // collapse of exact at-least-once duplicates (same url+seq) as a
-    // relational aggregation — agg output keeps HashPartitioning(url, n),
-    // so the downstream MERGE join inserts no exchange for this side.
-    val decoded = winners0.select(col("rec"), col("_n"))
-      .as[(Array[Byte], Long)].mapPartitions { it =>
-        it.map { case (rec, n) =>
-          val e = RecordCodec.decode(rec)
-          FullWinner(e.op, e.seq, e.url, e.warcTs, e.html, e.text, e.lang,
-            e.schemaVersion, e.fetch_status, e.content_len, n)
-        }
-      }.toDF()
-    val payloadCols = decoded.columns.filterNot(c => c == "_n" || c == "url")
-    val payload = struct(payloadCols.map(col).toSeq: _*)
-    decoded
-      .repartition(urlPartitions, col("url"))
-      .groupBy(col("url")) // keeping the group-key attribute preserves the
-      .agg(               // recognized HashPartitioning(url, urlPartitions)
-        max_by(payload, struct(col("warc_ts"), col("seq"))).as("_w"),
-        max(col("_n")).as("_n"))
-      .select(col("url") +: payloadCols.map(c => col(s"_w.$c").as(c)) :+ col("_n"): _*)
-  }
-
-  /** Two-phase salted LWW dedup over raw events + full decode of winners
-    * only. Output columns: the full lake event schema plus `_n` (events
-    * folded per winner). Output is HashPartitioning(url, urlPartitions) —
-    * aligned with the bucket layout, so the downstream MERGE join and the
-    * bucket-partitioned write need no further exchange of this side. */
-  def dedupRawAndDecode(
-      spark: SparkSession,
-      raw: Dataset[RawEvent],
-      salt: Int,
-      urlPartitions: Int): DataFrame = {
-    import spark.implicits._
-    val payload = struct(col("url"), col("seq"), col("ts_micros"), col("op"),
-      col("sv"), col("rec"))
-    val ord = struct(col("ts_micros"), col("seq"))
-    val phase1 = raw.toDF()
-      .withColumn("_salt", pmod(col("seq"), lit(salt.toLong)))
-      .groupBy(col("url"), col("_salt"))
-      .agg(max_by(payload, ord).as("_w"), count(lit(1)).as("_n"))
-    val winners = phase1
-      .repartition(urlPartitions, col("url"))
-      .groupBy(col("url"))
-      .agg(
-        max_by(col("_w"), struct(col("_w.ts_micros"), col("_w.seq"))).as("_w"),
-        sum(col("_n")).as("_n"))
-      .select(col("_w.rec").as("rec"), col("_n"))
-    winners.as[(Array[Byte], Long)].mapPartitions { it =>
-      it.map { case (rec, n) =>
-        val e = RecordCodec.decode(rec)
-        FullWinner(e.op, e.seq, e.url, e.warcTs, e.html, e.text, e.lang,
-          e.schemaVersion, e.fetch_status, e.content_len, n)
-      }
-    }.toDF()
+    mk("plan-winners")
+    (winners, (ev, mn, mx), maxSv)
   }
 
   // -------------------------------------------------------------------
   // 2. salted two-phase LWW dedup
   // -------------------------------------------------------------------
 
-  /** One winner row per url: max by (warc_ts, seq). Adds bookkeeping columns
-    * `_n` (events folded) and `_sv` (max schema version seen).
+  /** One winner row per url: max by (warc_ts, seq) — the trickle (pruned
+    * and merge-on-read) dedup. Adds bookkeeping columns `_n` (events
+    * folded) and `_sv` (max schema version seen over ALL folded events).
     * Phase 1 salts by `pmod(seq, salt)` — the salt must split same-key rows,
     * so it derives from the event position, not the key; phase 2 sees at
     * most `salt` rows per url regardless of how hot the domain is. */
@@ -841,8 +677,8 @@ object CdcIngest {
         val obs = org.apache.spark.sql.Observation(s"ingest-$batchId")
         // no salt here: keyStats' map-side combiner absorbs hot keys
         // before the shuffle, so the bulk key pass needs none (the salted
-        // two-phase form lives in dedupRawAndDecode for the pruned path)
-        val (winnersDf, keyTotals, maxSv) = dedupViaKeyBroadcast(
+        // two-phase form is lwwDedup, on the trickle path)
+        val (winnersDf, (evTotal, mnSeq, mxSeq), maxSv) = dedupViaKeyBroadcast(
           spark, segments.map(_._2), numBuckets,
           segmentsPerKeyTask = config.segmentsPerKeyTask)
         // evolution decision from the key pass's own sv statistics — the
@@ -852,18 +688,11 @@ object CdcIngest {
         val src = alignToRenames(winnersDf)
           .observe(obs,
             count(lit(1)).as("winners"),
-            sum(when(col("op") === ChangeEvent.OpDelete, 1L).otherwise(0L)).as("deletes"),
-            sum(col("_n")).as("events"),
-            min(col("seq")).as("minSeq"),
-            max(col("seq")).as("maxSeq"))
-          .drop("_n")
+            sum(when(col("op") === ChangeEvent.OpDelete, 1L).otherwise(0L)).as("deletes"))
         val tgt = readTarget(snap.files, snap.deleteFiles, physicalOf(schema))
           .repartition(numBuckets, col("url"))
         val files = writeMerged(mergeLww(src, tgt, dataCols), newVersion)
         val m = obs.get
-        val (evTotal, mnSeq, mxSeq) = keyTotals.getOrElse(
-          (m("events").asInstanceOf[Long], m("minSeq").asInstanceOf[Long],
-            m("maxSeq").asInstanceOf[Long]))
         val lineage = files.groupBy(_.bucket).toSeq.map { case (b, fs) =>
           Map[String, Any]("bucket" -> b.toLong, "rows" -> fs.map(_.rows).sum,
             "segFrom" -> segFrom, "segTo" -> segTo)
@@ -883,8 +712,8 @@ object CdcIngest {
       } else {
         // ---- pruned path: pre-pass finds touched buckets, merge reads
         // only their files; untouched buckets carry over by reference ----
-        val winners = dedupRawAndDecode(spark,
-            decodeRaw(spark, segments.map(_._2)), config.saltBuckets, numBuckets)
+        val winners = lwwDedup(eventsDf(spark, segments.map(_._2)),
+            config.saltBuckets, Some(numBuckets))
           .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(numBuckets))
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
@@ -892,7 +721,9 @@ object CdcIngest {
             count(lit(1)).as("winners"),
             sum(when(col("op") === ChangeEvent.OpDelete, 1L).otherwise(0L)).as("deletes"),
             sum(col("_n")).as("events"),
-            max(col("schema_version")).as("maxSv"),
+            // over ALL events, not just winners: a batch whose only v2
+            // event loses LWW still widens the schema, as on the bulk path
+            max(col("_sv")).as("maxSv"),
             min(col("seq")).as("minSeq"),
             max(col("seq")).as("maxSeq")).collect()
           mark("stats+cache")
@@ -905,7 +736,7 @@ object CdcIngest {
             snap.files.filter(f => touched.contains(f.bucket)), touchedDels,
             physicalOf(schema))
             .repartition(numBuckets, col("url"))
-          val src = alignToRenames(winners.drop("_n", LakeTable.BucketCol))
+          val src = alignToRenames(winners.drop("_n", "_sv", LakeTable.BucketCol))
           val (files, carriedFiles, carriedDels2, newDels2, strategy) =
             if (mor) {
               // ---- merge-on-read: write ONLY the rows the batch changed;
@@ -1386,31 +1217,20 @@ object CdcIngest {
     entries
   }
 
-  def parquetRowCount(p: Path, conf: org.apache.hadoop.conf.Configuration): Long =
-    parquetFooterInfo(p, conf)._1
-
-  /** One footer open → (row count, warc_ts zone map). The zone map is the
-    * min/max of `warc_ts` over non-null values across all row groups,
-    * usable only when the column is written as INT64 TIMESTAMP_MICROS
-    * (see [[withMicrosTimestamps]] — Spark's default INT96 carries no
-    * statistics). Any row group without a statistics object degrades the
-    * whole file to `None` (unbounded — always scanned), never to a wrong
-    * bound; all-null row groups simply contribute nothing. */
-  def parquetFooterInfo(p: Path, conf: org.apache.hadoop.conf.Configuration)
-      : (Long, Option[(Long, Long)]) = {
-    val (rows, ts, _) = parquetFooterAll(p, conf)
-    (rows, ts)
-  }
-
   /** One footer open → (row count, warc_ts zone map, generalized column
-    * bounds). The zone-map rules from [[parquetFooterInfo]]'s scaladoc
-    * carry over; the generalized bounds ([[graft.lake.ColStat]], the
-    * Iceberg lower/upper-bounds analog) are harvested for every primitive
-    * leaf column EXCEPT warc_ts (specialized above), system columns, and
-    * strings over 64 chars (a min/max of document texts would bloat the
-    * manifest for columns no one range-filters). Any row group with a
-    * missing statistics object degrades that column to absent — never to
-    * a wrong bound. */
+    * bounds). The zone map is the min/max of `warc_ts` over non-null
+    * values across all row groups, usable only when the column is written
+    * as INT64 TIMESTAMP_MICROS (see [[withMicrosTimestamps]] — Spark's
+    * default INT96 carries no statistics). Any row group without a
+    * statistics object degrades the whole file to `None` (unbounded —
+    * always scanned), never to a wrong bound; all-null row groups simply
+    * contribute nothing. The generalized bounds ([[graft.lake.ColStat]],
+    * the Iceberg lower/upper-bounds analog) are harvested for every
+    * primitive leaf column EXCEPT warc_ts (specialized above), system
+    * columns, and strings over 64 chars (a min/max of document texts would
+    * bloat the manifest for columns no one range-filters). Any row group
+    * with a missing statistics object degrades that column to absent —
+    * never to a wrong bound. */
   def parquetFooterAll(p: Path, conf: org.apache.hadoop.conf.Configuration)
       : (Long, Option[(Long, Long)], Map[String, graft.lake.ColStat]) = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -1501,12 +1321,6 @@ object CdcIngest {
     } finally rd.close()
   }
 
-  /** Run `body` (which must EXECUTE its write actions, not just plan them)
-    * with parquet timestamps written as INT64 TIMESTAMP_MICROS instead of
-    * Spark's default INT96: INT96 is deprecated, statistics-less (so no
-    * zone maps and no parquet row-group pruning on `warc_ts`), and larger
-    * on disk. Session-scoped set/restore — the engine's write paths are
-    * the only callers and run one write at a time per session. */
   /** Parquet split-block bloom filters on `url` for every lake DATA write
     * (ingest merge, compaction, rebucket). At 100 TB a bucket's files hold
     * many row groups, and the pushed `url IN (...)` residual of a point
@@ -1528,6 +1342,12 @@ object CdcIngest {
   private val RowGroupBloomNdv = 100000L
   private val MinDeltaBloomNdv = 128L
 
+  /** Run `body` (which must EXECUTE its write actions, not just plan them)
+    * with parquet timestamps written as INT64 TIMESTAMP_MICROS instead of
+    * Spark's default INT96: INT96 is deprecated, statistics-less (so no
+    * zone maps and no parquet row-group pruning on `warc_ts`), and larger
+    * on disk. Session-scoped set/restore — the engine's write paths are
+    * the only callers and run one write at a time per session. */
   private def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.get(key)

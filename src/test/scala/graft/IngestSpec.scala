@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -225,12 +226,10 @@ class IngestSpec extends SparkTestBase {
       maxCollectedKeys = 1)
     assert(asv == bsv && asv == 2,
       s"key-pass schema-version stat: broadcast=$asv fallback=$bsv (feed evolves to v2)")
-    val ca = a.drop("_n"); val cb = b.drop("_n")
-    assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty,
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "fallback winners differ from broadcast winners")
-    assert(at.map(t => (t._2, t._3)) == bt.map(t => (t._2, t._3)),
-      "seq ranges differ")
-    assert(at.get._1 == bt.get._1, "event totals differ")
+    assert((at._2, at._3) == (bt._2, bt._3), "seq ranges differ")
+    assert(at._1 == bt._1, "event totals differ")
   }
 
   test("compaction: fewer files, identical content; tombstone GC by horizon") {
@@ -306,13 +305,14 @@ class IngestSpec extends SparkTestBase {
     import graft.codec.RecordCodec
     // distinct-url inserts → every record is an LWW winner and passes the
     // integrity gate in the payload decode
-    val evs = (0 until 300).map { i =>
-      ChangeEvent(ChangeEvent.OpInsert, i.toLong, s"https://c.example.com/p/$i",
+    def inserts(host: String, seq0: Long) = (0 until 300).map { i =>
+      ChangeEvent(ChangeEvent.OpInsert, seq0 + i, s"https://$host/p/$i",
         RecordCodec.microsToTimestamp(1577836800000000L + i * 1000000L),
         Array[Byte](1, 2), s"text $i", "en", RecordCodec.SchemaV1, None, None)
     }
     val feed = tmpDir("crfeed")
-    val seg = RecordCodec.frameSegment(evs.iterator.map(RecordCodec.encode))
+    val seg = RecordCodec.frameSegment(
+      inserts("c.example.com", 0L).iterator.map(RecordCodec.encode))
     // flip a byte INSIDE record 100's free text — only the CRC can see this
     val (off, len) = RecordCodec.segmentOffsets(seg).drop(100).next()
     seg(off + len - 2) = (seg(off + len - 2) ^ 0x20).toByte
@@ -330,6 +330,69 @@ class IngestSpec extends SparkTestBase {
     // fail-fast means fail-CLEAN: no snapshot advanced, nothing committed
     assert(table.currentSnapshot().version == before)
     assert(table.read(spark).count() == 0)
+
+    // the same segment as a merge-on-read trickle batch onto a seeded table
+    val morFeed = tmpDir("crmorfeed")
+    Files.write(Paths.get(morFeed, "segment-000000.bin"), RecordCodec.frameSegment(
+      inserts("s.example.com", 1000L).iterator.map(RecordCodec.encode)))
+    val morConf = IngestConfig(numBuckets = 8, segmentsPerBatch = 1, mergeOnRead = true)
+    val seeded = mkTable()
+    CdcIngest.run(spark, seeded, morFeed, morConf)
+    Files.write(Paths.get(morFeed, "segment-000001.bin"), seg)
+    def tree(): Set[String] = {
+      val st = Files.walk(seeded.root)
+      try st.iterator().asScala.map(p => seeded.root.relativize(p).toString).toSet
+      finally st.close()
+    }
+    val seededVersion = seeded.currentSnapshot().version
+    val seededTree = tree()
+    val morThrown = intercept[Throwable] {
+      CdcIngest.run(spark, seeded, morFeed, morConf)
+    }
+    assert(hasCorrupt(morThrown), s"unexpected trickle failure: $morThrown")
+    assert(seeded.currentSnapshot().version == seededVersion)
+    assert(tree() == seededTree, "the failed trickle batch wrote files")
+  }
+
+  test("schema evolution: a v2 event that loses LWW widens the schema on every path") {
+    import graft.codec.RecordCodec
+    val t0 = 1577836800000000L
+    // one url: its only v2 event is older than a v1 event, so v1 wins
+    val batch = Seq(
+      ChangeEvent(ChangeEvent.OpUpdate, 5000L, "https://e.example.com/evolved",
+        RecordCodec.microsToTimestamp(t0), null, "v2 text", "en",
+        RecordCodec.SchemaV2, Some(200), Some(1234L)),
+      ChangeEvent(ChangeEvent.OpUpdate, 5001L, "https://e.example.com/evolved",
+        RecordCodec.microsToTimestamp(t0 + 1000000L), null, "v1 text", "en",
+        RecordCodec.SchemaV1, None, None))
+    def segment(evs: Seq[ChangeEvent]): Array[Byte] = RecordCodec.frameSegment(
+      evs.iterator.map(RecordCodec.encode), evs.map(_.schemaVersion).max)
+    // bulk: the batch is the first load of an empty table
+    val bulkFeed = tmpDir("evbulk")
+    Files.write(Paths.get(bulkFeed, "segment-000000.bin"), segment(batch))
+    val bulk = mkTable()
+    val bulkSnap = CdcIngest.run(spark, bulk, bulkFeed, IngestConfig(numBuckets = 8)).last
+    assert(bulkSnap.metrics("strategy") == "bulk")
+    assert(bulkSnap.schema.fieldNames.contains("fetch_status"))
+    // trickle: the same batch onto a seeded v1 table, rewrite and MoR
+    val base = (0 until 2000).map { i =>
+      ChangeEvent(ChangeEvent.OpInsert, i.toLong, s"https://b.example.com/p/$i",
+        RecordCodec.microsToTimestamp(t0 + i), null, s"base text $i", "en",
+        RecordCodec.SchemaV1, None, None)
+    }
+    for ((mor, strategy) <- Seq(false -> "pruned", true -> "mor")) {
+      val feed = tmpDir("evtrickle")
+      Files.write(Paths.get(feed, "segment-000000.bin"), segment(base))
+      Files.write(Paths.get(feed, "segment-000001.bin"), segment(batch))
+      val table = mkTable()
+      val snap = CdcIngest.run(spark, table, feed,
+        IngestConfig(numBuckets = 8, segmentsPerBatch = 1, mergeOnRead = mor)).last
+      assert(snap.metrics("strategy") == strategy)
+      assert(snap.schema == bulkSnap.schema, s"$strategy schema differs from bulk")
+      val row = table.read(spark).filter(col("url") === "https://e.example.com/evolved")
+        .select("text", "fetch_status").head()
+      assert(row.getString(0) == "v1 text" && row.isNullAt(1))
+    }
   }
 
   test("lineage + metrics metadata tables are populated and consistent") {

@@ -53,6 +53,30 @@ class RecordDecodeExprSpec extends SparkTestBase {
     assert(df.count() == 10)
   }
 
+  test("decode_record registers once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    RecordDecodeExpr.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    // every registration records a fresh ExpressionInfo
+    val first = registry.lookupFunction(FunctionIdentifier("decode_record"))
+    RecordDecodeExpr.register(spark)
+    val second = registry.lookupFunction(FunctionIdentifier("decode_record"))
+    assert(first.isDefined && first.get.eq(second.get),
+      "a second register replaced the session's function")
+  }
+
+  test("decode_record rejects any argument count other than 1") {
+    import spark.implicits._
+    import org.apache.spark.sql.AnalysisException
+    RecordDecodeExpr.register(spark)
+    val df = Seq(Array[Byte](1)).toDF("rec")
+    for (call <- Seq("decode_record()", "decode_record(rec, rec)")) {
+      val e = intercept[AnalysisException](df.select(expr(call)))
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", s"$call: $e")
+      assert(e.getMessage.contains("`decode_record` requires 1 parameters"), s"$call: $e")
+    }
+  }
+
   test("null and malformed input") {
     import spark.implicits._
     RecordDecodeExpr.register(spark)
