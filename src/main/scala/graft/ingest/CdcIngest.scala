@@ -3,7 +3,7 @@ package graft.ingest
 import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -44,10 +44,10 @@ import graft.model.ChangeEvent
 object CdcIngest {
 
   final case class IngestConfig(
+      /** Not read by the engine: every write takes the snapshot's `numBuckets`. */
       numBuckets: Int = 32,
       saltBuckets: Int = 16,
       segmentsPerBatch: Int = 4,
-      segmentsPerKeyTask: Int = 25,
       // Target rows per data file (0 = unlimited). At 100 TB a bucket is
       // tens of GB; without a cap the merge writes ONE file per bucket —
       // a single writer task, an unsplittable scan unit, and an object-
@@ -253,7 +253,7 @@ object CdcIngest {
     * sees at most #tasks rows per url by construction. Also populates the
     * executor-local [[SegmentCache]] for the payload pass.
     *
-    * Task granularity is DATA-determined (`segmentsPerTask`), never
+    * Task granularity is DATA-determined ([[SegmentsPerKeyTask]]), never
     * cluster-determined: sizing tasks by `defaultParallelism` made the
     * combine ratio — and therefore the total shuffle volume — grow with
     * the cluster (measured: 3.7M vs 2.3M shuffled key rows for the same
@@ -261,16 +261,15 @@ object CdcIngest {
     * 1000-executor run cannot afford. Fixed granularity keeps per-task
     * combine state bounded (~25 segs ≈ 500k events ≈ ≤16 MB of combiner
     * arrays) and shuffle volume invariant across cluster sizes. */
-  private def keyStats(spark: SparkSession, segmentPaths: Seq[String],
-      segmentsPerTask: Int = 25): Dataset[KeyAgg] = {
+  private def keyStats(spark: SparkSession, segmentPaths: Seq[String]): Dataset[KeyAgg] = {
     import spark.implicits._
     // floor at min(#segments, cluster width): a small bulk batch (fewer
-    // than segmentsPerTask segments) would otherwise run the key pass as
+    // than SegmentsPerKeyTask segments) would otherwise run the key pass as
     // ONE task regardless of cluster size. The floor keeps small batches
     // parallel while large batches stay data-bounded (shuffle volume
     // invariant across cluster sizes — the scaling property that matters).
     val tasks = math.max(
-      (segmentPaths.size + segmentsPerTask - 1) / segmentsPerTask,
+      (segmentPaths.size + SegmentsPerKeyTask - 1) / SegmentsPerKeyTask,
       math.min(segmentPaths.size, spark.sparkContext.defaultParallelism))
     segmentScan(spark, segmentPaths, Some(tasks), retain = true) { segs =>
       val combiner = new KeyCombiner()
@@ -287,6 +286,8 @@ object CdcIngest {
       combiner.result
     }
   }
+
+  private val SegmentsPerKeyTask = 25
 
   /** Broadcast winner-seq membership filter. */
   sealed trait SeqFilter extends Serializable { def contains(v: Long): Boolean }
@@ -370,8 +371,7 @@ object CdcIngest {
       spark: SparkSession,
       segmentPaths: Seq[String],
       urlPartitions: Int,
-      maxCollectedKeys: Int = 4000000,
-      segmentsPerKeyTask: Int = 25): (DataFrame, (Long, Long, Long), Int) = {
+      maxCollectedKeys: Int = 4000000): (DataFrame, (Long, Long, Long), Int) = {
     import spark.implicits._
     val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
     var tM = System.nanoTime()
@@ -380,7 +380,7 @@ object CdcIngest {
       System.err.println(f"[trace]   $ph%-16s ${(now - tM) / 1e9}%7.3f s")
       tM = now
     }
-    val winnerKeys = keyStats(spark, segmentPaths, segmentsPerKeyTask)
+    val winnerKeys = keyStats(spark, segmentPaths)
       .groupBy(col("h1"), col("h2"))
       .agg(max_by(struct(col("wts"), col("wseq")), struct(col("wts"), col("wseq"))).as("_w"),
         sum(col("n")).as("_n"), min(col("mn")).as("_mn"), max(col("mx")).as("_mx"),
@@ -648,28 +648,16 @@ object CdcIngest {
         }
       }
 
-    /** write bucket-partitioned files; relies on merge inputs being
-      * repartition(numBuckets, url)-aligned so `_bucket == partition id`
-      * and NO post-join shuffle is needed. */
-    def writeMerged(merged: DataFrame, newVersion: Long,
-        bloomNdv: Long = RowGroupBloomNdv): Seq[DataFileEntry] = {
-      val tmpDir = table.root.resolve(s".tmp-${java.util.UUID.randomUUID()}")
-      val w = withUrlBloom(merged
-        .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(numBuckets))
-        .write, bloomNdv).partitionBy(LakeTable.BucketCol).mode("overwrite")
-      withMicrosTimestamps(spark) {
-        (if (config.maxFileRows > 0)
-           w.option("maxRecordsPerFile", config.maxFileRows)
-         else w)
-          .parquet(tmpDir.toString)
-      }
-      mark("merge+write")
-      val files = moveDataFiles(spark, table, tmpDir, newVersion, wapTag)
-      mark("move+footers")
+    val newVersion = snap.version + 1
+
+    /** merge inputs are repartition(numBuckets, url)-aligned, so
+      * `_bucket == partition id` and NO post-join shuffle is needed. */
+    def writeMerged(merged: DataFrame, bloomNdv: Long = RowGroupBloomNdv): Seq[DataFileEntry] = {
+      val files = writeBucketFiles(spark, table, merged, numBuckets, newVersion,
+        wapTag, config.maxFileRows, bloomNdv = bloomNdv)
+      mark("merge+write+move")
       files
     }
-
-    val newVersion = snap.version + 1
 
     val (newSchema, newFiles, carried, carriedDels, newDels, lineageRows, statsMap) =
       if (bulk) {
@@ -678,9 +666,8 @@ object CdcIngest {
         // no salt here: keyStats' map-side combiner absorbs hot keys
         // before the shuffle, so the bulk key pass needs none (the salted
         // two-phase form is lwwDedup, on the trickle path)
-        val (winnersDf, (evTotal, mnSeq, mxSeq), maxSv) = dedupViaKeyBroadcast(
-          spark, segments.map(_._2), numBuckets,
-          segmentsPerKeyTask = config.segmentsPerKeyTask)
+        val (winnersDf, (evTotal, mnSeq, mxSeq), maxSv) =
+          dedupViaKeyBroadcast(spark, segments.map(_._2), numBuckets)
         // evolution decision from the key pass's own sv statistics — the
         // eager key job has already run by this point
         val schema = evolvedSchema(maxSv)
@@ -691,7 +678,7 @@ object CdcIngest {
             sum(when(col("op") === ChangeEvent.OpDelete, 1L).otherwise(0L)).as("deletes"))
         val tgt = readTarget(snap.files, snap.deleteFiles, physicalOf(schema))
           .repartition(numBuckets, col("url"))
-        val files = writeMerged(mergeLww(src, tgt, dataCols), newVersion)
+        val files = writeMerged(mergeLww(src, tgt, dataCols))
         val m = obs.get
         val lineage = files.groupBy(_.bucket).toSeq.map { case (b, fs) =>
           Map[String, Any]("bucket" -> b.toLong, "rows" -> fs.map(_.rows).sum,
@@ -758,7 +745,7 @@ object CdcIngest {
                   val dvFut = Future(writeDeletionVectors(
                     spark, table, snap, cached, touched, numBuckets,
                     newVersion, winnerRows, wapTag))
-                  val dataFiles = writeMerged(cached, newVersion, deltaNdv)
+                  val dataFiles = writeMerged(cached, deltaNdv)
                   (dataFiles, snap.files, snap.deleteFiles,
                     Await.result(dvFut, Duration.Inf), "mor-dv")
                 } finally cached.unpersist()
@@ -766,13 +753,13 @@ object CdcIngest {
                 // a delta file holds exactly the commit's changed keys, so it
                 // is also the commit's equality-delete file (read url-only;
                 // `_dv > _av` keeps it from hiding its own rows)
-                val dataFiles = writeMerged(changed, newVersion, deltaNdv)
+                val dataFiles = writeMerged(changed, deltaNdv)
                 (dataFiles, snap.files, snap.deleteFiles,
                   dataFiles.map(f => graft.lake.DeleteFileEntry(
                     f.path, f.bucket, f.rows, f.sizeBytes, newVersion)), "mor")
               }
             } else {
-              val fs = writeMerged(mergeLww(src, target, dataCols), newVersion)
+              val fs = writeMerged(mergeLww(src, target, dataCols))
               // the rewrite folded the touched buckets' deltas into base
               (fs, snap.files.filterNot(f => touched.contains(f.bucket)),
                 snap.deleteFiles.filterNot(d => touched.contains(d.bucket)),
@@ -931,27 +918,13 @@ object CdcIngest {
       case Some(h) => all.filter(!col(LakeTable.DeletedCol) || col("warc_ts") >= lit(h))
       case None    => all
     }
-    val tmpDir = table.root.resolve(s".tmp-${java.util.UUID.randomUUID()}")
-    val w = withUrlBloom(kept
-      .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(snap.numBuckets))
-      .repartition(snap.numBuckets, col("url")) // partitioning == bucket id
-      // leading BucketCol satisfies the partitioned write's required
-      // ordering, so FileFormatWriter adds NO extra sort of its own
-      .sortWithinPartitions(
-        (col(LakeTable.BucketCol) +:
-          (if (zOrderBy.nonEmpty)
-             Seq(graft.lake.ZOrder.zvalue(kept, snap.schema, zOrderBy))
-           else clusterBy.map(col))) ++
-          Seq(col("warc_ts"), col("url")): _*)
-      .write).partitionBy(LakeTable.BucketCol).mode("overwrite")
-    withMicrosTimestamps(spark) {
-      (if (maxFileRows > 0) w.option("maxRecordsPerFile", maxFileRows) else w)
-        .parquet(tmpDir.toString)
-    }
     // unique name tag: a racing ingest commits the same version number
     // with un-tagged names, so tagged compaction files can never collide
-    val tag = "-c" + java.util.UUID.randomUUID().toString.take(8)
-    val newFiles = moveDataFiles(spark, table, tmpDir, snap.version + 1, tag)
+    val newFiles = writeBucketFiles(spark, table, kept, snap.numBuckets,
+      snap.version + 1, "-c" + java.util.UUID.randomUUID().toString.take(8),
+      maxFileRows, Some(
+        if (zOrderBy.nonEmpty) Seq(graft.lake.ZOrder.zvalue(kept, snap.schema, zOrderBy))
+        else clusterBy.map(col)))
     beforeCommit() // test seam: inject a racing writer here
 
     // Optimistic-concurrency commit (Iceberg rewrite_data_files
@@ -1034,23 +1007,13 @@ object CdcIngest {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
     require(newBuckets != snap.numBuckets,
       s"table already has ${snap.numBuckets} buckets")
-    val physical = physicalOf(snap.schema)
     // delete-aware read: the full rewrite folds any stacked MoR deltas, so
     // the new layout starts with pure base files and no delete files
-    val all = table.readFiles(spark, physical, snap.files, snap.deleteFiles,
-      snap.renames)
-    val tmpDir = table.root.resolve(s".tmp-${java.util.UUID.randomUUID()}")
-    val w = withUrlBloom(all
-      .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(newBuckets))
-      .repartition(newBuckets, col("url"))
-      .sortWithinPartitions(col(LakeTable.BucketCol), col("warc_ts"), col("url"))
-      .write).partitionBy(LakeTable.BucketCol).mode("overwrite")
-    withMicrosTimestamps(spark) {
-      (if (maxFileRows > 0) w.option("maxRecordsPerFile", maxFileRows) else w)
-        .parquet(tmpDir.toString)
-    }
-    val tag = "-rb" + java.util.UUID.randomUUID().toString.take(8)
-    val newFiles = moveDataFiles(spark, table, tmpDir, snap.version + 1, tag)
+    val newFiles = writeBucketFiles(spark, table,
+      table.readFiles(spark, physicalOf(snap.schema), snap.files, snap.deleteFiles,
+        snap.renames),
+      newBuckets, snap.version + 1, "-rb" + java.util.UUID.randomUUID().toString.take(8),
+      maxFileRows, Some(Seq.empty))
     val out = Snapshot(
       version = snap.version + 1, batchId = s"rebucket-v${snap.version}-b$newBuckets",
       parentVersion = snap.version, watermarkSegment = snap.watermarkSegment,
@@ -1127,6 +1090,42 @@ object CdcIngest {
         isDel.as(LakeTable.DeletedCol): _*)
   }
 
+  /** The one lake data-file writer (bulk, pruned and MoR ingest writes,
+    * compaction, rebucket): adds `_bucket`, writes bucket-partitioned
+    * parquet with a `url` bloom ([[withUrlBloom]]), INT64-micros `warc_ts`
+    * ([[withMicrosTimestamps]]) and at most `maxFileRows` rows per file
+    * (0 = unlimited), then moves the files in ([[moveDataFiles]]).
+    * `sortKeys = None` takes `rows` as already url-partitioned into
+    * `numBuckets` (merge output, so `_bucket == partition id`); a rewrite
+    * passes `Some(keys)` and gets one repartition by url and one
+    * within-bucket sort by `_bucket`, `keys`, `warc_ts`, `url` — the
+    * leading `_bucket` satisfies the partitioned write's required
+    * ordering, so the writer adds no sort of its own. */
+  private def writeBucketFiles(
+      spark: SparkSession,
+      table: LakeTable,
+      rows: DataFrame,
+      numBuckets: Int,
+      version: Long,
+      nameTag: String,
+      maxFileRows: Long,
+      sortKeys: Option[Seq[Column]] = None,
+      bloomNdv: Long = RowGroupBloomNdv): Seq[DataFileEntry] = {
+    val bucketed = rows.withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(numBuckets))
+    val laid = sortKeys.fold(bucketed)(keys => bucketed
+      .repartition(numBuckets, col("url"))
+      .sortWithinPartitions(
+        (col(LakeTable.BucketCol) +: keys) ++ Seq(col("warc_ts"), col("url")): _*))
+    val tmpDir = table.root.resolve(s".tmp-${java.util.UUID.randomUUID()}")
+    val w = withUrlBloom(laid.write, bloomNdv)
+      .partitionBy(LakeTable.BucketCol).mode("overwrite")
+    withMicrosTimestamps(spark) {
+      (if (maxFileRows > 0) w.option("maxRecordsPerFile", maxFileRows) else w)
+        .parquet(tmpDir.toString)
+    }
+    moveDataFiles(spark, table, tmpDir, version, nameTag)
+  }
+
   /** Locate and record the exact (file, row) positions a MoR-DV commit
     * supersedes (Iceberg v3 deletion-vector / Delta DV analog). One
     * column-pruned scan of the touched buckets' existing files (url plus
@@ -1137,7 +1136,12 @@ object CdcIngest {
     * hot url updated every batch would re-record its long-dead base-file
     * position each time and the vector stack would grow O(batches). The
     * same property keeps the read-time anti-join input minimal. Returns
-    * the new vector files, bucket-partitioned like every delete file. */
+    * the new vector files, bucket-partitioned like every delete file.
+    * Not written through [[writeBucketFiles]]: it runs on a second thread
+    * while the data write is still running, and that writer's
+    * [[withMicrosTimestamps]] sets and restores a session-wide setting —
+    * a second caller would race the restore and could leave the data
+    * files in INT96 with no zone maps. */
   private def writeDeletionVectors(
       spark: SparkSession,
       table: LakeTable,
@@ -1180,18 +1184,19 @@ object CdcIngest {
         newVersion, kind = graft.lake.DeleteFileEntry.Positional))
   }
 
-  /** Move spark's partitioned output into the table's data dir under
-    * version-scoped names; row counts come from parquet footers (metadata
-    * only — no extra Spark job). `nameTag` must be non-empty for any
-    * writer that can RACE the ingest path to the same target version
-    * (compaction): two writers producing the same `s{v}-b{b}-{i}` name
-    * silently replace each other's file via POSIX rename, and the loser's
-    * cleanup then deletes the winner's live data. */
+  /** Move spark's partitioned output ([[writeBucketFiles]], the vector
+    * write) into the table's data dir under version-scoped names; row
+    * counts come from parquet footers (metadata only — no extra Spark
+    * job). `nameTag` must be non-empty for any write that can RACE the
+    * ingest path to the same target version (compaction): two writers
+    * producing the same `s{v}-b{b}-{i}` name silently replace each
+    * other's file via POSIX rename, and the loser's cleanup then deletes
+    * the winner's live data. */
   private def moveDataFiles(
       spark: SparkSession, table: LakeTable, tmpDir: Path, version: Long,
       nameTag: String = ""): Seq[DataFileEntry] = {
     val conf = spark.sessionState.newHadoopConf()
-    val bucketDirs = listDirClosed(tmpDir)
+    val bucketDirs = LakeTable.listDir(tmpDir)
       .filter(p => p.getFileName.toString.startsWith(s"${LakeTable.BucketCol}="))
     // parallel: footer reads are ~10ms each and there can be hundreds of
     // buckets — serial moves were showing up as per-batch driver stalls
@@ -1200,7 +1205,7 @@ object CdcIngest {
     import scala.concurrent.ExecutionContext.Implicits.global
     val entryFutures = bucketDirs.map { bd => Future {
       val bucket = bd.getFileName.toString.stripPrefix(s"${LakeTable.BucketCol}=").toInt
-      val parts = listDirClosed(bd)
+      val parts = LakeTable.listDir(bd)
         .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
       parts.zipWithIndex.map { case (p, i) =>
         val name = f"s$version%08d$nameTag%s-b$bucket%05d-$i%03d.parquet"
@@ -1213,7 +1218,7 @@ object CdcIngest {
       }
     }}
     val entries = Await.result(Future.sequence(entryFutures), Duration.Inf).flatten
-    deleteRecursively(tmpDir)
+    LakeTable.deleteRecursively(tmpDir)
     entries
   }
 
@@ -1322,9 +1327,9 @@ object CdcIngest {
   }
 
   /** Parquet split-block bloom filters on `url` for every lake DATA write
-    * (ingest merge, compaction, rebucket). At 100 TB a bucket's files hold
-    * many row groups, and the pushed `url IN (...)` residual of a point
-    * lookup can then skip every row group whose bloom misses — the
+    * (all of them go through [[writeBucketFiles]]). At 100 TB a bucket's
+    * files hold many row groups, and the pushed `url IN (...)` residual of
+    * a point lookup can then skip every row group whose bloom misses — the
     * row-group-level twin of the manifest's bucket planning. parquet-mr
     * evaluates blooms during its row-group filtering, so nothing is needed
     * on the read side. NDV is sized to the ROW GROUP (the bloom's scope),
@@ -1334,7 +1339,7 @@ object CdcIngest {
     * so that write passes an ndv derived from the batch's winner count. */
   private def withUrlBloom(
       w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      ndv: Long = RowGroupBloomNdv)
+      ndv: Long)
       : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
     w.option("parquet.bloom.filter.enabled#url", "true")
       .option("parquet.bloom.filter.expected.ndv#url", ndv.toString)
@@ -1346,8 +1351,8 @@ object CdcIngest {
     * with parquet timestamps written as INT64 TIMESTAMP_MICROS instead of
     * Spark's default INT96: INT96 is deprecated, statistics-less (so no
     * zone maps and no parquet row-group pruning on `warc_ts`), and larger
-    * on disk. Session-scoped set/restore — the engine's write paths are
-    * the only callers and run one write at a time per session. */
+    * on disk. Session-scoped set/restore — [[writeBucketFiles]] is the
+    * only caller and runs one write at a time per session. */
   private def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.get(key)
@@ -1357,19 +1362,13 @@ object CdcIngest {
 
   /** Read-time physical schema: the logical columns plus the engine's
     * system columns (`_seq` LWW order, `_deleted` tombstone) — ONE
-    * construction shared by applyBatch, compact, and rebucket so the
-    * physical layout cannot drift between the three writers (the write
+    * construction for every read that feeds [[writeBucketFiles]], so the
+    * physical layout of the files it writes cannot drift (the write
     * side's non-null variant lives in [[LakeTable.physicalSchema]]). */
   private def physicalOf(schema: StructType): StructType =
     StructType(schema.fields ++ Array(
       StructField(LakeTable.SeqCol, LongType),
       StructField(LakeTable.DeletedCol, BooleanType)))
-
-  // fd-safe listing/deletion: the engine-wide utilities (streams closed;
-  // moveDataFiles runs per commit on a long trickle run, so a dropped
-  // stream here would leak an fd per commit)
-  private def listDirClosed(dir: Path): Seq[Path] = LakeTable.listDir(dir)
-  private def deleteRecursively(p: Path): Unit = LakeTable.deleteRecursively(p)
 
   // -------------------------------------------------------------------
   // driver loop: resumable from checkpoint (= the snapshot watermark)

@@ -4,25 +4,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** One committed table version. `files` carries bucket + row count per data
-  * file — the manifest is what makes MERGE-time partition (bucket) pruning
-  * possible without a metastore (SURVEY.md §4 "partition pruning").
-  *
-  * Lineage fields (per north rule): segment offset range applied by the
-  * batch, per-bucket row counts, commit snapshot id, and batch metrics.
-  */
-/** One data file in a snapshot manifest. `tsMinMicros`/`tsMaxMicros` are
-  * file-level zone-map statistics for `warc_ts` (micros since epoch,
-  * min/max over non-null values), harvested from the parquet footer during
-  * the commit-time footer read — no extra Spark job. `None` means
-  * "unbounded" (legacy manifests, files written before the stats landed,
-  * or footers without usable statistics): such files are always kept by
-  * [[LakeTable.filesInRange]], so the feature degrades to a full plan,
-  * never a wrong one. */
 /** Per-file column bounds (Iceberg lower/upper-bounds analog), harvested
   * from the parquet footer at move time — zero extra IO. `typ` is the
   * comparison domain: "long" (INT32/INT64), "double" (FLOAT/DOUBLE) or
@@ -32,6 +17,14 @@ import org.apache.spark.sql.types._
   * for a column simply omit it and are never pruned on it. */
 final case class ColStat(typ: String, min: String, max: String)
 
+/** One data file in a snapshot manifest. `tsMinMicros`/`tsMaxMicros` are
+  * file-level zone-map statistics for `warc_ts` (micros since epoch,
+  * min/max over non-null values), harvested from the parquet footer during
+  * the commit-time footer read — no extra Spark job. `None` means
+  * "unbounded" (legacy manifests, files written before the stats landed,
+  * or footers without usable statistics): such files are always kept by
+  * [[LakeTable.filesInRange]], so the feature degrades to a full plan,
+  * never a wrong one. */
 final case class DataFileEntry(path: String, bucket: Int, rows: Long, sizeBytes: Long = 0L,
     tsMinMicros: Option[Long] = None, tsMaxMicros: Option[Long] = None,
     addedVersion: Long = 0L, colStats: Map[String, ColStat] = Map.empty)
@@ -75,6 +68,13 @@ object DeleteFileEntry {
 final case class ManifestRef(path: String, bucket: Int,
     dataFiles: Int, deleteFiles: Int)
 
+/** One committed table version. `files` carries bucket + row count per data
+  * file — the manifest is what makes MERGE-time partition (bucket) pruning
+  * possible without a metastore (SURVEY.md §4 "partition pruning").
+  *
+  * Lineage fields (per north rule): segment offset range applied by the
+  * batch, per-bucket row counts, commit snapshot id, and batch metrics.
+  */
 final case class Snapshot(
     version: Long,
     batchId: String,
@@ -159,15 +159,8 @@ final class LakeTable(val root: Path) {
     readSnapshot(versions.max)
   }
 
-  /** Directory listing materialized eagerly with the stream CLOSED — this
-    * runs on every snapshot load / commit gate / metadata query, so a
-    * dropped stream would leak an fd per call until the driver hits
-    * EMFILE on a long trickle-ingest run. Delegates to the engine-wide
-    * [[LakeTable.listDir]]. */
-  private def listDirEntries(dir: Path): Seq[Path] = LakeTable.listDir(dir)
-
   def listVersions(): Seq[Long] =
-    listDirEntries(snapshotsDir)
+    listDir(snapshotsDir)
       .map(_.getFileName.toString)
       .collect { case SnapName(v) => v.toLong }
 
@@ -301,14 +294,7 @@ final class LakeTable(val root: Path) {
           Files.write(tmp, bytes)
           // content-addressed: EEXIST means another writer just landed the
           // IDENTICAL bytes — not a conflict, unlike the version claim
-          try Files.createLink(p, tmp)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException => ()
-            case _: UnsupportedOperationException =>
-              try Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-              catch { case _: java.nio.file.FileAlreadyExistsException => () }
-          }
-          Files.deleteIfExists(tmp)
+          linkOnce(tmp, p)
         }
         cacheManifest(rel, (fs, ds))
         ManifestRef(rel, b, fs.size, ds.size)
@@ -320,12 +306,19 @@ final class LakeTable(val root: Path) {
     * success, or the already-committed identical snapshot when the same
     * batchId raced/was replayed (idempotent re-commit, SURVEY.md §2.10). */
   def commit(snap: Snapshot, allowSchemaRegression: Boolean = false): Snapshot = {
-    // Fail-closed evolution gate: the new snapshot's schema must be an
-    // additive/promotable evolution of the current one (no dropped columns,
-    // no narrowing). Throws the typed SchemaEvolutionException otherwise.
-    // [[rollback]] is the one caller allowed through: restoring a
-    // pre-evolution snapshot legitimately restores its narrower schema.
-    if (!allowSchemaRegression && listVersions().nonEmpty) {
+    // [[rollback]] is the one caller allowed past the evolution gate:
+    // restoring a pre-evolution snapshot legitimately restores its
+    // narrower schema.
+    if (!allowSchemaRegression) requireEvolution(snap)
+    claim(snap, snapPath(snap.version), "commit")
+  }
+
+  /** Fail-closed evolution gate of [[commit]] and [[stage]]: the new
+    * snapshot's schema must be an additive/promotable evolution of the
+    * current one (no dropped columns, no narrowing). Throws the typed
+    * SchemaEvolutionException otherwise. */
+  private def requireEvolution(snap: Snapshot): Unit =
+    if (listVersions().nonEmpty) {
       val cur = currentSnapshot()
       if (cur.version < snap.version && cur.schemaJson != snap.schemaJson) {
         // View the current schema through the new snapshot's DECLARED
@@ -361,33 +354,22 @@ final class LakeTable(val root: Path) {
           }
       }
     }
+
+  /** The one snapshot claim of [[commit]] and [[stage]]: write `snap`'s
+    * manifests and JSON, then [[LakeTable.linkOnce]] it to `target`. When
+    * `target` exists, the same batchId is accepted (idempotent re-commit
+    * or re-stage) and a different one fails with "`what` conflict" — the
+    * lost version race [[tryCommit]] reports as None. */
+  private def claim(snap: Snapshot, target: Path, what: String): Snapshot = {
     val refs = writeManifests(snap)
-    val json = renderSnapshot(snap, refs)
     val tmp = snapshotsDir.resolve(s".tmp-${java.util.UUID.randomUUID()}.json")
-    Files.write(tmp, json.getBytes("UTF-8"))
-    // Claim the version with createLink (link(2)), NOT a rename: on POSIX,
-    // rename(2) — what Files.move(ATOMIC_MOVE) compiles to — silently
-    // REPLACES an existing target, so a lost version race would clobber
-    // the other writer's snapshot instead of throwing. link(2) is atomic
-    // AND fails with EEXIST, which is the exactly-once/optimistic-
-    // concurrency primitive both the idempotent re-commit and tryCommit
-    // rely on. Falls back to move only where hard links are unsupported
-    // (documented non-POSIX limitation, SURVEY §7.0).
-    try {
-      try Files.createLink(snapPath(snap.version), tmp)
-      catch {
-        case _: UnsupportedOperationException =>
-          Files.move(tmp, snapPath(snap.version), StandardCopyOption.ATOMIC_MOVE)
-      }
-      Files.deleteIfExists(tmp)
-      snap.copy(manifests = refs)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        val existing = readSnapshot(snap.version)
-        require(existing.batchId == snap.batchId,
-          s"commit conflict at v${snap.version}: ${existing.batchId} != ${snap.batchId}")
-        existing
+    Files.write(tmp, renderSnapshot(snap, refs).getBytes("UTF-8"))
+    if (linkOnce(tmp, target)) snap.copy(manifests = refs)
+    else {
+      val existing = parseSnapshot(Files.readAllBytes(target))
+      require(existing.batchId == snap.batchId,
+        s"$what conflict at v${snap.version}: ${existing.batchId} != ${snap.batchId}")
+      existing
     }
   }
 
@@ -415,56 +397,30 @@ final class LakeTable(val root: Path) {
   // quality-gated without readers ever seeing a bad version, and without
   // writing the batch twice.
 
-  private def stagedDir: Path = snapshotsDir
   private def stagedPath(version: Long): Path =
-    stagedDir.resolve(f"staged-v$version%012d.json")
+    snapshotsDir.resolve(f"staged-v$version%012d.json")
 
   /** Park a fully-built snapshot as the staged candidate. Same evolution
     * gate and same idempotency contract as [[commit]] (re-staging the same
     * batchId is a no-op; a DIFFERENT candidate at the same version throws).
     * Only one staged version can exist at a time — WAP is a serial gate. */
   def stage(snap: Snapshot): Snapshot = {
-    if (listVersions().nonEmpty) {
-      val cur = currentSnapshot()
-      if (cur.version < snap.version && cur.schemaJson != snap.schemaJson)
-        graft.schema.SchemaValidator.requireCompatible(cur.schema, snap.schema)
-    }
+    requireEvolution(snap)
     stagedSnapshot().filter(_.version != snap.version).foreach { s =>
       throw new IllegalStateException(
         s"a staged snapshot already exists at v${s.version} " +
           "(publish or discard it first)")
     }
-    val refs = writeManifests(snap)
-    val json = renderSnapshot(snap, refs)
-    val tmp = snapshotsDir.resolve(s".tmp-${java.util.UUID.randomUUID()}.json")
-    Files.write(tmp, json.getBytes("UTF-8"))
-    try {
-      try Files.createLink(stagedPath(snap.version), tmp)
-      catch {
-        case _: UnsupportedOperationException =>
-          Files.move(tmp, stagedPath(snap.version), StandardCopyOption.ATOMIC_MOVE)
-      }
-      Files.deleteIfExists(tmp)
-      snap.copy(manifests = refs)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        val existing = parseSnapshot(Files.readAllBytes(stagedPath(snap.version)))
-        require(existing.batchId == snap.batchId,
-          s"stage conflict at v${snap.version}: ${existing.batchId} != ${snap.batchId}")
-        existing
-    }
+    claim(snap, stagedPath(snap.version), "stage")
   }
 
   /** The current staged candidate, if any. */
   def stagedSnapshot(): Option[Snapshot] = {
-    if (!Files.isDirectory(stagedDir)) return None
-    val st = Files.list(stagedDir)
-    val names = try st.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith("staged-v") && n.endsWith(".json")).toSeq
-    finally st.close()
+    if (!Files.isDirectory(snapshotsDir)) return None
+    val names = listDir(snapshotsDir).map(_.getFileName.toString)
+      .filter(n => n.startsWith("staged-v") && n.endsWith(".json"))
     names.sorted.lastOption.map(n =>
-      parseSnapshot(Files.readAllBytes(stagedDir.resolve(n))))
+      parseSnapshot(Files.readAllBytes(snapshotsDir.resolve(n))))
   }
 
   /** Promote the staged candidate to the real commit. Fails if the table
@@ -624,11 +580,7 @@ final class LakeTable(val root: Path) {
   }
 
   /** Live rows, user schema only (tombstones and system columns dropped). */
-  def read(spark: SparkSession): DataFrame = {
-    val snap = currentSnapshot()
-    val cols = snap.schema.fieldNames.map(col).toSeq
-    readRaw(spark, snap).filter(!col(DeletedCol)).select(cols: _*)
-  }
+  def read(spark: SparkSession): DataFrame = liveRows(spark, currentSnapshot())
 
   /** Time-travel read: live rows exactly as of the given committed snapshot
     * version, through THAT snapshot's schema (a version before an additive
@@ -636,11 +588,12 @@ final class LakeTable(val root: Path) {
     * semantics). Snapshot manifests are immutable and data files are never
     * mutated in place, so this is a plain manifest-driven scan of the old
     * file set; cost is identical to a current-version read of the same data. */
-  def readAsOf(spark: SparkSession, version: Long): DataFrame = {
-    val snap = readSnapshot(version)
-    val cols = snap.schema.fieldNames.map(col).toSeq
-    readRaw(spark, snap).filter(!col(DeletedCol)).select(cols: _*)
-  }
+  def readAsOf(spark: SparkSession, version: Long): DataFrame =
+    liveRows(spark, readSnapshot(version))
+
+  private def liveRows(spark: SparkSession, snap: Snapshot): DataFrame =
+    readRaw(spark, snap).filter(!col(DeletedCol))
+      .select(snap.schema.fieldNames.map(col).toSeq: _*)
 
   /** Buckets whose data-file sets differ between two snapshots. A bucket
     * with an identical (path, rows) file list cannot contain a logical
@@ -670,25 +623,8 @@ final class LakeTable(val root: Path) {
     * and the join is a bucket-colocated full-outer on the key (both sides
     * share the url-hash layout, so AQE plans a shuffle on url that
     * repartitions only the changed buckets' rows). */
-  def changesBetween(spark: SparkSession, fromVersion: Long, toVersion: Long): DataFrame = {
-    require(fromVersion <= toVersion, s"fromVersion $fromVersion > toVersion $toVersion")
-    val s1 = readSnapshot(fromVersion)
-    val s2 = readSnapshot(toVersion)
-    val changed = changedBuckets(s1, s2)
-    val old = readRaw(spark, s1, Some(changed))
-      .select(col("url"), col(SeqCol).as("_seq_old"), col(DeletedCol).as("_del_old"))
-    val neu = readRaw(spark, s2, Some(changed))
-    val payload = s2.schema.fieldNames.filterNot(_ == "url").toSeq
-    val j = neu.join(old, Seq("url"), "full_outer")
-    val liveOld = col("_seq_old").isNotNull && !col("_del_old")
-    val liveNew = col(SeqCol).isNotNull && !col(DeletedCol)
-    val changeOp = when(!liveOld && liveNew, lit("I"))
-      .when(liveOld && liveNew && col(SeqCol) =!= col("_seq_old"), lit("U"))
-      .when(liveOld && !liveNew, lit("D"))
-    j.withColumn("change_op", changeOp)
-      .filter(col("change_op").isNotNull)
-      .select(col("change_op") +: col("url") +: payload.map(col): _*)
-  }
+  def changesBetween(spark: SparkSession, fromVersion: Long, toVersion: Long): DataFrame =
+    changeDiff(spark, fromVersion, toVersion)((payload, _, _) => payload.map(col))
 
   /** Incremental changelog WITH pre-images (Delta Lake CDF
     * `update_preimage`/`update_postimage` analog): one row per key whose
@@ -711,7 +647,24 @@ final class LakeTable(val root: Path) {
     * proportional to change volume, never table size. Reference analog:
     * the row-level before/after compare of `data_validator.py:292-337`,
     * emitted as a consumable stream instead of a report. */
-  def changeDeltas(spark: SparkSession, fromVersion: Long, toVersion: Long): DataFrame = {
+  def changeDeltas(spark: SparkSession, fromVersion: Long, toVersion: Long): DataFrame =
+    // null the non-live side's images so a tombstone's stale payload can
+    // never leak into a consumer's delta arithmetic
+    changeDiff(spark, fromVersion, toVersion) { (payload, liveOld, liveNew) =>
+      payload.map(c => when(liveOld, col(s"${c}_before")).as(s"${c}_before")) ++
+        payload.map(c => when(liveNew, col(c)).as(s"${c}_after"))
+    }
+
+  /** The diff [[changesBetween]] and [[changeDeltas]] share: both
+    * snapshots' [[changedBuckets]], full-outer joined on url, keeping the
+    * keys whose visible state differs, tagged `change_op`. The joined row
+    * carries the `to` side's columns under their own names and the `from`
+    * side's payload as `<c>_before` (null-typed when the column is newer
+    * than `from`); `images(payload, liveOld, liveNew)` picks the columns
+    * after `change_op` and `url`. Unselected pre-images are pruned from
+    * the `from` scan. */
+  private def changeDiff(spark: SparkSession, fromVersion: Long, toVersion: Long)(
+      images: (Seq[String], Column, Column) => Seq[Column]): DataFrame = {
     require(fromVersion <= toVersion, s"fromVersion $fromVersion > toVersion $toVersion")
     val s1 = readSnapshot(fromVersion)
     val s2 = readSnapshot(toVersion)
@@ -721,26 +674,18 @@ final class LakeTable(val root: Path) {
     val old = readRaw(spark, s1, Some(changed)).select(
       col("url") +: col(SeqCol).as("_seq_old") +: col(DeletedCol).as("_del_old") +:
         payload.map { c =>
-          val v = if (oldHas(c)) col(c)
-                  else lit(null).cast(s2.schema(c).dataType)
-          v.as(s"${c}_before")
+          (if (oldHas(c)) col(c) else lit(null).cast(s2.schema(c).dataType))
+            .as(s"${c}_before")
         }: _*)
-    val neu = readRaw(spark, s2, Some(changed)).select(
-      col("url") +: col(SeqCol) +: col(DeletedCol) +:
-        payload.map(c => col(c).as(s"${c}_after")): _*)
-    val j = neu.join(old, Seq("url"), "full_outer")
     val liveOld = col("_seq_old").isNotNull && !col("_del_old")
     val liveNew = col(SeqCol).isNotNull && !col(DeletedCol)
     val changeOp = when(!liveOld && liveNew, lit("I"))
       .when(liveOld && liveNew && col(SeqCol) =!= col("_seq_old"), lit("U"))
       .when(liveOld && !liveNew, lit("D"))
-    // null the non-live side's images so a tombstone's stale payload can
-    // never leak into a consumer's delta arithmetic
-    j.withColumn("change_op", changeOp)
+    readRaw(spark, s2, Some(changed)).join(old, Seq("url"), "full_outer")
+      .withColumn("change_op", changeOp)
       .filter(col("change_op").isNotNull)
-      .select(col("change_op") +: col("url") +:
-        (payload.map(c => when(liveOld, col(s"${c}_before")).as(s"${c}_before")) ++
-          payload.map(c => when(liveNew, col(s"${c}_after")).as(s"${c}_after"))): _*)
+      .select(col("change_op") +: col("url") +: images(payload, liveOld, liveNew): _*)
   }
 
   /** Per-commit lineage rows across all snapshots → the `_lineage` metadata
@@ -900,9 +845,6 @@ final class LakeTable(val root: Path) {
       .select(cols: _*)
   }
 
-  private def statCompare(typ: String, a: String, b: String): Int =
-    LakeTable.statOrder(typ, a, b)
-
   /** Manifest-only file pruning on ANY column with harvested bounds (the
     * generalized twin of [[filesInRange]]'s warc_ts zone maps — Iceberg's
     * lower/upper-bounds planning): keep files whose [min,max] for `column`
@@ -921,8 +863,8 @@ final class LakeTable(val root: Path) {
     val names = column +: snap.renames.getOrElse(column, Seq.empty)
     snap.files.filter { f =>
       names.iterator.flatMap(n => f.colStats.get(n)).nextOption().forall { st =>
-        lo.forall(l => statCompare(st.typ, st.max, l) >= 0) &&
-          hi.forall(h => statCompare(st.typ, st.min, h) <= 0)
+        lo.forall(l => statOrder(st.typ, st.max, l) >= 0) &&
+          hi.forall(h => statOrder(st.typ, st.min, h) <= 0)
       }
     }
   }
@@ -951,15 +893,6 @@ final class LakeTable(val root: Path) {
     bounded.select(cols: _*)
   }
 
-  /** Expire old snapshots (Iceberg `expire_snapshots` analog): keep the
-    * newest `keepLast` versions, delete the older manifests, then delete
-    * data files referenced ONLY by expired snapshots. A file shared with any
-    * retained snapshot survives, so retained reads (including [[readAsOf]]
-    * within the retention window) are byte-identical before and after; time
-    * travel to an expired version fails on its missing manifest. Expiration
-    * is metadata-first: a crash after the manifest deletes leaves only
-    * orphan data files (invisible, re-collectable), never a torn table.
-    * @return (expired versions, deleted data-file paths) */
   /** Iceberg type-promotion analog (ALTER TABLE … TYPE): widen a column
     * along the promotion matrix as a METADATA-ONLY commit. The file set is
     * untouched — existing files keep their narrower physical type and
@@ -1086,33 +1019,20 @@ final class LakeTable(val root: Path) {
     Files.createDirectories(refsDir)
     val tmp = refsDir.resolve(s".tmp-${java.util.UUID.randomUUID()}")
     Files.write(tmp, version.toString.getBytes("UTF-8"))
-    try {
-      try Files.createLink(refsDir.resolve(name), tmp)
-      catch {
-        case _: UnsupportedOperationException =>
-          Files.move(tmp, refsDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      }
-      Files.deleteIfExists(tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        val existing = tags()(name)
-        require(existing == version,
-          s"tag '$name' already points at v$existing (tags are immutable)")
+    if (!linkOnce(tmp, refsDir.resolve(name))) {
+      val existing = tags()(name)
+      require(existing == version,
+        s"tag '$name' already points at v$existing (tags are immutable)")
     }
   }
 
   def tags(): Map[String, Long] =
     if (!Files.isDirectory(refsDir)) Map.empty
-    else {
-      val st = Files.list(refsDir)
-      try st.iterator().asScala
-        .filterNot(_.getFileName.toString.startsWith("."))
-        .map(p => p.getFileName.toString ->
-          new String(Files.readAllBytes(p), "UTF-8").trim.toLong)
-        .toMap
-      finally st.close()
-    }
+    else listDir(refsDir)
+      .filterNot(_.getFileName.toString.startsWith("."))
+      .map(p => p.getFileName.toString ->
+        new String(Files.readAllBytes(p), "UTF-8").trim.toLong)
+      .toMap
 
   /** Resolve a version number or tag name to a version. */
   def resolveVersion(ref: String): Long =
@@ -1151,6 +1071,15 @@ final class LakeTable(val root: Path) {
       allowSchemaRegression = true)
   }
 
+  /** Expire old snapshots (Iceberg `expire_snapshots` analog): keep the
+    * newest `keepLast` versions, delete the older manifests, then delete
+    * data files referenced ONLY by expired snapshots. A file shared with any
+    * retained snapshot survives, so retained reads (including [[readAsOf]]
+    * within the retention window) are byte-identical before and after; time
+    * travel to an expired version fails on its missing manifest. Expiration
+    * is metadata-first: a crash after the manifest deletes leaves only
+    * orphan data files (invisible, re-collectable), never a torn table.
+    * @return (expired versions, deleted data-file paths) */
   def expireSnapshots(keepLast: Int): (Seq[Long], Seq[Path]) = {
     require(keepLast >= 1, s"keepLast must retain the current snapshot, got $keepLast")
     val versions = listVersions().sorted
@@ -1191,7 +1120,7 @@ final class LakeTable(val root: Path) {
     val referenced = (listVersions().map(readSnapshot) ++ stagedSnapshot())
       .flatMap(s => s.files.map(_.path) ++ s.deleteFiles.map(_.path)).toSet
     if (!Files.isDirectory(dataDir)) Seq.empty
-    else listDirEntries(dataDir)
+    else listDir(dataDir)
       .filter(p => !referenced.contains(root.relativize(p).toString))
   }
 
@@ -1203,7 +1132,7 @@ final class LakeTable(val root: Path) {
     val referenced = (listVersions().map(readSnapshot) ++ stagedSnapshot())
       .flatMap(_.manifests.map(_.path)).toSet
     if (!Files.isDirectory(manifestsDir)) Seq.empty
-    else listDirEntries(manifestsDir)
+    else listDir(manifestsDir)
       .filter(p => !p.getFileName.toString.startsWith("."))
       .filter(p => !referenced.contains(root.relativize(p).toString))
   }
@@ -1228,7 +1157,7 @@ final class LakeTable(val root: Path) {
     * no mtime update), operator-tunable via the gc CLI's --older-than-hours. */
   def staleTmpDirs(olderThanMs: Long = 24L * 60 * 60 * 1000): Seq[Path] = {
     val cutoff = System.currentTimeMillis() - olderThanMs
-    listDirEntries(root)
+    listDir(root)
       .filter(p => Files.isDirectory(p) &&
         p.getFileName.toString.startsWith(".tmp-"))
       .filter { d =>
@@ -1291,6 +1220,26 @@ object LakeTable {
     try st.iterator().asScala.toVector
     finally st.close()
   }
+
+  /** Land `tmp` at `target` exactly once and delete `tmp`; false when
+    * `target` already exists. Uses createLink (link(2)), NOT a rename: on
+    * POSIX, rename(2) — what Files.move(ATOMIC_MOVE) compiles to —
+    * silently REPLACES an existing target, so a lost version race would
+    * clobber the other writer's file instead of failing. link(2) is atomic
+    * AND fails with EEXIST, the exactly-once/optimistic-concurrency
+    * primitive behind every snapshot, manifest and tag claim. Falls back
+    * to move only where hard links are unsupported (documented non-POSIX
+    * limitation, SURVEY §7.0). */
+  private def linkOnce(tmp: Path, target: Path): Boolean =
+    try {
+      try Files.createLink(target, tmp)
+      catch {
+        case _: UnsupportedOperationException =>
+          Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      }
+      true
+    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
 
   /** Recursive delete with the walk stream CLOSED; no-op when `p` is
     * absent (so a path that vanished between listing and deletion — e.g.

@@ -6,6 +6,7 @@ import org.apache.parquet.column.values.bloomfilter.BloomFilter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 
 import graft.feed.{FeedGen, FeedSpec}
 import graft.ingest.CdcIngest
@@ -37,12 +38,51 @@ class BloomFilterSpec extends SparkTestBase {
     } finally rd.close()
   }
 
+  /** The `warc_ts` column's parquet type in a data file's footer. */
+  private def warcTsType(table: LakeTable, path: String): PrimitiveType = {
+    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(
+      table.root.resolve(path).toUri), spark.sessionState.newHadoopConf())
+    val rd = ParquetFileReader.open(in)
+    try rd.getFooter.getFileMetaData.getSchema.getType(Seq("warc_ts"): _*).asPrimitiveType
+    finally rd.close()
+  }
+
   test("ingest, compaction and rebucket all write url blooms; membership is sound") {
     val feed = tmpDir("bloomfeed")
     FeedGen.writeSegments(spec, feed)
     val table = LakeTable.create(tmpDir("bloomtbl"), CdcIngest.PagesSchemaV1, 8)
-    CdcIngest.run(spark, table, feed,
-      IngestConfig(numBuckets = 8, segmentsPerBatch = 2))
+    val segs = CdcIngest.listSegments(feed)
+    val cap = 20L
+
+    /** The writer contract on every data file the latest commit added: a
+      * url bloom, INT64 TIMESTAMP(MICROS) `warc_ts` with its zone map in
+      * the manifest, and at most `cap` rows where a cap was set. */
+    def assertNewFiles(capped: Boolean): Unit = {
+      val snap = table.currentSnapshot()
+      val added = snap.files.filter(_.addedVersion == snap.version)
+      assert(added.nonEmpty, s"v${snap.version} added no data files")
+      added.foreach { f =>
+        assert(bloomOf(table, f.path).isDefined, s"${f.path} has no url bloom filter")
+        val ts = warcTsType(table, f.path)
+        assert(ts.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT64 &&
+          ts.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(
+            true, LogicalTypeAnnotation.TimeUnit.MICROS), s"${f.path} warc_ts is $ts")
+        assert(f.tsMinMicros.isDefined && f.tsMaxMicros.isDefined,
+          s"${f.path} has no warc_ts zone map in the manifest")
+        if (capped) assert(f.rows <= cap, s"${f.path} holds ${f.rows} rows > cap $cap")
+      }
+    }
+
+    // bulk load, a capped second batch, then a merge-on-read trickle commit
+    CdcIngest.applyBatch(spark, table, segs.take(2), IngestConfig(numBuckets = 8))
+    assertNewFiles(capped = false)
+    CdcIngest.applyBatch(spark, table, segs.slice(2, 3),
+      IngestConfig(numBuckets = 8, maxFileRows = cap))
+    assertNewFiles(capped = true)
+    val mor = CdcIngest.applyBatch(spark, table, segs.slice(3, 4),
+      IngestConfig(numBuckets = 8, mergeOnRead = true))
+    assert(mor.metrics("strategy") == "mor")
+    assertNewFiles(capped = false)
 
     def assertBloomsSound(): Unit = {
       val snap = table.currentSnapshot()
@@ -69,8 +109,13 @@ class BloomFilterSpec extends SparkTestBase {
 
     assertBloomsSound() // ingest-written files (multi-file buckets: presence only)
     CdcIngest.compact(spark, table) // single-file buckets: full soundness check
+    assertNewFiles(capped = false)
     assertBloomsSound()
     CdcIngest.rebucket(spark, table, 16)
+    assertNewFiles(capped = false)
+    assertBloomsSound()
+    CdcIngest.rebucket(spark, table, 8, maxFileRows = cap)
+    assertNewFiles(capped = true)
     assertBloomsSound()
 
     // lookup stays correct through bloom-filtered row-group reads

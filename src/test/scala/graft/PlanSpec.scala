@@ -106,6 +106,62 @@ class PlanSpec extends SparkTestBase {
     assert(snap.files.map(_.rows).sum == table.readRaw(spark, snap).count())
   }
 
+  test("compaction and rebucket writes: one shuffle and one _bucket-led sort each") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val spec = FeedSpec(seed = 5L, numEvents = 1000, numUrls = 200, eventsPerSegment = 500)
+    val dir = tmpDir("rwplanfeed")
+    FeedGen.writeSegments(spec, dir)
+    val table = LakeTable.create(tmpDir("rwplantbl"), CdcIngest.PagesSchemaV1, 8)
+    CdcIngest.run(spark, table, dir, IngestConfig(numBuckets = 8, segmentsPerBatch = 1))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // the write command runs inside AQE's final plan (a result query stage)
+    val writes = new LinkedBlockingQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        aqe.collectFirst(qe.executedPlan) { case w: DataWritingCommandExec => w.cmd }
+          .foreach {
+            case i: InsertIntoHadoopFsRelationCommand =>
+              writes.put((i.outputPath.toString, qe.executedPlan))
+            case _ =>
+          }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    /** The plan of the one write `run` issues. A marker write goes first:
+      * listener events arrive in order, so once the marker's arrives no
+      * earlier write (the ingest's) is still in flight. */
+    def writePlan(run: => Unit): SparkPlan = {
+      val marker = tmpDir("marker")
+      spark.range(1).write.mode("overwrite").parquet(marker)
+      Iterator.continually(writes.poll(30, TimeUnit.SECONDS))
+        .find(w => w == null || w._1.endsWith(marker))
+      run
+      Option(writes.poll(30, TimeUnit.SECONDS)).getOrElse(fail("no write captured"))._2
+    }
+    spark.listenerManager.register(listener)
+    try Seq[(String, () => Unit)](
+        "compact" -> (() => CdcIngest.compact(spark, table)),
+        "rebucket" -> (() => CdcIngest.rebucket(spark, table, 16))).foreach {
+      case (name, rewrite) =>
+        val plan = writePlan(rewrite())
+        val shuffles = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+        val sorts = aqe.collect(plan) { case s: SortExec => s }
+        assert(shuffles.size == 1, s"$name: expected 1 shuffle, found ${shuffles.size}:\n$plan")
+        assert(sorts.size == 1, s"$name: expected 1 sort, found ${sorts.size}:\n$plan")
+        val keys = sorts.head.sortOrder.map(_.child match {
+          case a: Attribute => a.name
+          case e => e.sql
+        })
+        assert(keys == Seq(LakeTable.BucketCol, "warc_ts", "url"), s"$name sorts by $keys")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("DV read: positional vectors apply as a broadcast anti-join, zero shuffles") {
     val spec = FeedSpec(seed = 92L, numEvents = 2000, numUrls = 300,
       eventsPerSegment = 500)

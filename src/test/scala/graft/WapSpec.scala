@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.feed.{FeedGen, FeedSpec}
 import graft.ingest.CdcIngest
@@ -160,5 +161,33 @@ class WapSpec extends SparkTestBase {
     val bogus = table.stagedSnapshot().get.copy(version = 99L, batchId = "rogue")
     val e = intercept[IllegalStateException](table.stage(bogus))
     assert(e.getMessage.contains("already exists"))
+  }
+
+  test("stage runs commit's evolution gate: no resurrection, declared renames pass") {
+    val (table, _) = setup()
+    def candidate(batchId: String, schema: StructType, renames: Map[String, Seq[String]]) = {
+      val cur = table.currentSnapshot()
+      cur.copy(version = cur.version + 1, parentVersion = cur.version, batchId = batchId,
+        schemaJson = schema.json, lineage = Seq.empty, renames = renames)
+    }
+    def names(dir: java.nio.file.Path) = LakeTable.listDir(dir).map(_.getFileName.toString).toSet
+    // (a) re-adding a dropped column would surface the dead values its old
+    // files still carry: refused before any staged JSON or manifest lands
+    val dropped = table.dropColumn("lang")
+    val (snapsBefore, mansBefore) = (names(table.snapshotsDir), names(table.manifestsDir))
+    intercept[IllegalArgumentException](table.stage(candidate("readd-lang",
+      dropped.schema.add(StructField("lang", StringType)), dropped.renames)))
+    assert(table.stagedSnapshot().isEmpty)
+    assert(names(table.snapshotsDir) == snapsBefore && names(table.manifestsDir) == mansBefore)
+    // (b) a declared rename stages, and publish serves the new name
+    val texts = table.read(spark).select("url", "text").collect().map(r => (r(0), r(1))).toSet
+    val renamed = StructType(dropped.schema.fields.map(f =>
+      if (f.name == "text") f.copy(name = "body") else f))
+    table.stage(candidate("rename-text-body", renamed, dropped.renames + ("body" -> Seq("text"))))
+    assert(table.stagedSnapshot().map(_.batchId).contains("rename-text-body"))
+    table.publishStaged()
+    val after = table.read(spark)
+    assert(after.columns.contains("body") && !after.columns.contains("text"))
+    assert(after.select("url", "body").collect().map(r => (r(0), r(1))).toSet == texts)
   }
 }
