@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -36,8 +37,14 @@ import graft.model.ChangeEvent
   *
   * Scale notes (100 TB): parallelism of decode = #segments; the only
   * shuffles are the two dedup aggregations (partial-agg'd, keyed by url —
-  * salting bounds per-reducer hot-key volume), the merge join (both sides
-  * hashed by url), and the final repartition by bucket for file clustering.
+  * salting bounds per-reducer hot-key volume) and the merge target's
+  * url hash. Every bucket-aligned exchange hashes url into P partitions,
+  * P a divisor of `numBuckets` sized to the cluster and the data
+  * ([[alignedPartitions]]), so partition = bucket mod P: each bucket
+  * lands whole in one task and the merge output is written with no
+  * post-join shuffle. A merge-on-read target is not forced through that
+  * exchange: the optimizer broadcasts it, or co-partitions it to the
+  * winners' url hash when it is too large to broadcast.
   * Read amplification is bounded by bucket pruning: untouched buckets are
   * carried into the new snapshot by reference, never rewritten.
   */
@@ -366,7 +373,9 @@ object CdcIngest {
     * Returns (winners df, (events, minSeq, maxSeq), max schema version
     * seen in the batch — from the key rows, so the caller's evolution
     * decision needs no driver-side segment reads). The winners are
-    * HashPartitioning(url, urlPartitions). */
+    * HashPartitioning(url, urlPartitions); with `urlPartitions` a divisor
+    * of the table's bucket count ([[alignedPartitions]]) each bucket's
+    * winners sit in one partition. */
   def dedupViaKeyBroadcast(
       spark: SparkSession,
       segmentPaths: Seq[String],
@@ -502,10 +511,10 @@ object CdcIngest {
         max(col("schema_version")).as("_sv"))
     // When the caller needs the output clustered for a downstream join,
     // phase 2's exchange IS that clustering: repartition(n, url) satisfies
-    // the groupBy(url) distribution and none is needed later
-    // (HashPartitioning(url, n) == bucket layout). Total exchanges in this
-    // dedup: exactly two — phase 1's partial-agg'd (url, _salt)
-    // distribution (the skew-defusing one) and this alignment
+    // the groupBy(url) distribution and none is needed later (with n a
+    // divisor of the bucket count, partition = bucket mod n). Total
+    // exchanges in this dedup: exactly two — phase 1's partial-agg'd
+    // (url, _salt) distribution (the skew-defusing one) and this alignment
     // repartition — pinned by PlanSpec.
     val rep = urlPartitions match {
       case Some(n) => phase1.repartition(n, col("url"))
@@ -517,7 +526,12 @@ object CdcIngest {
         max_by(col("_w"), struct(col("_w.warc_ts"), col("_w.seq"))).as("_w"),
         sum(col("_n")).as("_n"),
         max(col("_sv")).as("_sv"))
-      .select(col("_w.*"), col("_n"), col("_sv"))
+      // `url` is the grouping key itself, not `_w.url`: the output then
+      // keeps the alignment's HashPartitioning(url, n), so a join against
+      // it (also through a cache) adds no exchange on this side
+      .select(events.columns.map(c =>
+        if (c == "url") col("url") else col(s"_w.$c").as(c)).toSeq :+
+        col("_n") :+ col("_sv"): _*)
   }
 
   // -------------------------------------------------------------------
@@ -608,6 +622,9 @@ object CdcIngest {
     // with observe() stats. A trickle batch keeps the pruned two-job path.
     mark("segment-sizes")
     val tableBytes = snap.files.map(_.sizeBytes).sum
+    // every bucket-aligned exchange of this commit hashes url into `parts`
+    // partitions; batch + table bytes bound what the merge can touch
+    val parts = alignedPartitions(spark, numBuckets, batchBytes + tableBytes)
     // merge-on-read only makes sense against an existing base: the first
     // load into an empty table is a plain full write either way
     val mor = config.mergeOnRead && snap.files.nonEmpty
@@ -650,10 +667,11 @@ object CdcIngest {
 
     val newVersion = snap.version + 1
 
-    /** merge inputs are repartition(numBuckets, url)-aligned, so
-      * `_bucket == partition id` and NO post-join shuffle is needed. */
+    /** merge inputs are hashed by url into `parts` partitions, so each
+      * bucket's rows sit in one partition (`_bucket mod parts ==
+      * partition id`) and NO post-join shuffle is needed. */
     def writeMerged(merged: DataFrame, bloomNdv: Long = RowGroupBloomNdv): Seq[DataFileEntry] = {
-      val files = writeBucketFiles(spark, table, merged, numBuckets, newVersion,
+      val files = writeBucketFiles(spark, table, merged, numBuckets, parts, newVersion,
         wapTag, config.maxFileRows, bloomNdv = bloomNdv)
       mark("merge+write+move")
       files
@@ -667,7 +685,7 @@ object CdcIngest {
         // before the shuffle, so the bulk key pass needs none (the salted
         // two-phase form is lwwDedup, on the trickle path)
         val (winnersDf, (evTotal, mnSeq, mxSeq), maxSv) =
-          dedupViaKeyBroadcast(spark, segments.map(_._2), numBuckets)
+          dedupViaKeyBroadcast(spark, segments.map(_._2), parts)
         // evolution decision from the key pass's own sv statistics — the
         // eager key job has already run by this point
         val schema = evolvedSchema(maxSv)
@@ -677,7 +695,7 @@ object CdcIngest {
             count(lit(1)).as("winners"),
             sum(when(col("op") === ChangeEvent.OpDelete, 1L).otherwise(0L)).as("deletes"))
         val tgt = readTarget(snap.files, snap.deleteFiles, physicalOf(schema))
-          .repartition(numBuckets, col("url"))
+          .repartition(parts, col("url"))
         val files = writeMerged(mergeLww(src, tgt, dataCols))
         val m = obs.get
         val lineage = files.groupBy(_.bucket).toSeq.map { case (b, fs) =>
@@ -700,7 +718,7 @@ object CdcIngest {
         // ---- pruned path: pre-pass finds touched buckets, merge reads
         // only their files; untouched buckets carry over by reference ----
         val winners = lwwDedup(eventsDf(spark, segments.map(_._2)),
-            config.saltBuckets, Some(numBuckets))
+            config.saltBuckets, Some(parts))
           .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(numBuckets))
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
@@ -719,10 +737,12 @@ object CdcIngest {
           val schema = evolvedSchema(maxSv)
           val dataCols = schema.fieldNames.toSeq
           val touchedDels = snap.deleteFiles.filter(d => touched.contains(d.bucket))
+          // not repartitioned here: the MoR join lets the optimizer
+          // broadcast the target (or co-partition it to the winners'
+          // url hash); the rewrite below aligns it explicitly
           val target = readTarget(
             snap.files.filter(f => touched.contains(f.bucket)), touchedDels,
             physicalOf(schema))
-            .repartition(numBuckets, col("url"))
           val src = alignToRenames(winners.drop("_n", "_sv", LakeTable.BucketCol))
           val (files, carriedFiles, carriedDels2, newDels2, strategy) =
             if (mor) {
@@ -759,7 +779,8 @@ object CdcIngest {
                     f.path, f.bucket, f.rows, f.sizeBytes, newVersion)), "mor")
               }
             } else {
-              val fs = writeMerged(mergeLww(src, target, dataCols))
+              val fs = writeMerged(
+                mergeLww(src, target.repartition(parts, col("url")), dataCols))
               // the rewrite folded the touched buckets' deltas into base
               (fs, snap.files.filterNot(f => touched.contains(f.bucket)),
                 snap.deleteFiles.filterNot(d => touched.contains(d.bucket)),
@@ -921,6 +942,7 @@ object CdcIngest {
     // unique name tag: a racing ingest commits the same version number
     // with un-tagged names, so tagged compaction files can never collide
     val newFiles = writeBucketFiles(spark, table, kept, snap.numBuckets,
+      alignedPartitions(spark, snap.numBuckets, srcFiles.map(_.sizeBytes).sum),
       snap.version + 1, "-c" + java.util.UUID.randomUUID().toString.take(8),
       maxFileRows, Some(
         if (zOrderBy.nonEmpty) Seq(graft.lake.ZOrder.zvalue(kept, snap.schema, zOrderBy))
@@ -1012,7 +1034,8 @@ object CdcIngest {
     val newFiles = writeBucketFiles(spark, table,
       table.readFiles(spark, physicalOf(snap.schema), snap.files, snap.deleteFiles,
         snap.renames),
-      newBuckets, snap.version + 1, "-rb" + java.util.UUID.randomUUID().toString.take(8),
+      newBuckets, alignedPartitions(spark, newBuckets, snap.files.map(_.sizeBytes).sum),
+      snap.version + 1, "-rb" + java.util.UUID.randomUUID().toString.take(8),
       maxFileRows, Some(Seq.empty))
     val out = Snapshot(
       version = snap.version + 1, batchId = s"rebucket-v${snap.version}-b$newBuckets",
@@ -1090,15 +1113,39 @@ object CdcIngest {
         isDel.as(LakeTable.DeletedCol): _*)
   }
 
+  /** The partition count of every bucket-aligned exchange: the smallest
+    * divisor of `numBuckets` that is at least `max(parallelism,
+    * ceil(bytes / advisoryBytes))`, or `numBuckets` when none is. Because
+    * it divides `numBuckets`, `pmod(hash(url), numBuckets) mod P ==
+    * pmod(hash(url), P)`: each bucket still lands in exactly one
+    * partition. A small commit on a small cluster runs one task per core
+    * instead of `numBuckets` near-empty ones; at scale the bytes term
+    * brings P back to `numBuckets`, so large tables keep their
+    * parallelism. */
+  private[graft] def alignedPartitions(
+      numBuckets: Int, parallelism: Int, bytes: Long, advisoryBytes: Long): Int = {
+    val want = math.max(parallelism.toLong, (bytes + advisoryBytes - 1) / advisoryBytes)
+    (1 to numBuckets).find(d => numBuckets % d == 0 && d >= want).getOrElse(numBuckets)
+  }
+
+  /** [[alignedPartitions]] for this session: the cluster width and the
+    * AQE advisory partition size, for a job that touches at most `bytes`. */
+  private def alignedPartitions(spark: SparkSession, numBuckets: Int, bytes: Long): Int =
+    alignedPartitions(numBuckets, spark.sparkContext.defaultParallelism, bytes,
+      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+
   /** The one lake data-file writer (bulk, pruned and MoR ingest writes,
     * compaction, rebucket): adds `_bucket`, writes bucket-partitioned
     * parquet with a `url` bloom ([[withUrlBloom]]), INT64-micros `warc_ts`
     * ([[withMicrosTimestamps]]) and at most `maxFileRows` rows per file
     * (0 = unlimited), then moves the files in ([[moveDataFiles]]).
-    * `sortKeys = None` takes `rows` as already url-partitioned into
-    * `numBuckets` (merge output, so `_bucket == partition id`); a rewrite
-    * passes `Some(keys)` and gets one repartition by url and one
-    * within-bucket sort by `_bucket`, `keys`, `warc_ts`, `url` — the
+    * `partitions` divides `numBuckets` ([[alignedPartitions]]), so a url
+    * hash into `partitions` puts each bucket in one partition (partition
+    * = bucket mod `partitions`) and every touched bucket gets one file
+    * (or its `maxFileRows` rolls). `sortKeys = None` takes `rows` as
+    * already hashed that way (merge output); a rewrite passes `Some(keys)`
+    * and gets one repartition by url into `partitions` and one
+    * within-partition sort by `_bucket`, `keys`, `warc_ts`, `url` — the
     * leading `_bucket` satisfies the partitioned write's required
     * ordering, so the writer adds no sort of its own. */
   private def writeBucketFiles(
@@ -1106,6 +1153,7 @@ object CdcIngest {
       table: LakeTable,
       rows: DataFrame,
       numBuckets: Int,
+      partitions: Int,
       version: Long,
       nameTag: String,
       maxFileRows: Long,
@@ -1113,7 +1161,7 @@ object CdcIngest {
       bloomNdv: Long = RowGroupBloomNdv): Seq[DataFileEntry] = {
     val bucketed = rows.withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(numBuckets))
     val laid = sortKeys.fold(bucketed)(keys => bucketed
-      .repartition(numBuckets, col("url"))
+      .repartition(partitions, col("url"))
       .sortWithinPartitions(
         (col(LakeTable.BucketCol) +: keys) ++ Seq(col("warc_ts"), col("url")): _*))
     val tmpDir = table.root.resolve(s".tmp-${java.util.UUID.randomUUID()}")

@@ -48,7 +48,10 @@ object StreamingIngest {
   /** Run a streaming ingest over `feedDir`. With [[Trigger.AvailableNow]]
     * (the default) this drains everything currently in the directory and
     * stops — the replay-from-WAL shape; a processing-time trigger tails the
-    * directory indefinitely. Returns the number of micro-batches applied. */
+    * directory indefinitely. Returns the number of micro-batches applied.
+    * Without a `checkpointDir` the run checkpoints to a temp dir of its
+    * own and deletes it once the query has stopped; a caller's dir is
+    * left in place for the next run to resume from. */
   def run(
       spark: SparkSession,
       table: LakeTable,
@@ -68,41 +71,44 @@ object StreamingIngest {
         else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
       Files.createTempDirectory(base, "graft-stream-ckpt").toString
     }
-    var batches = 0L
-    // the binaryFile source's fixed schema, required explicitly for streams
-    val binaryFileSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
-    val reader = spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "segment-*.bin")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    val files = reader.load(feedDir)
-      .select(col("path")) // content stays in the source; applyBatch re-reads
-    val query = files.writeStream
-      .queryName("graft-cdc-ingest")
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batchDf: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // The batch content is only a trigger; the authoritative work list
-        // is a fresh directory listing filtered to the contiguous run above
-        // the lake watermark (delivery order across micro-batches is not
-        // monotone in segment id — see scaladoc).
-        batchDf.select(count(lit(1))).collect() // force the source to advance
-        if (applyContiguous(spark, table, feedDir, config)) batches += 1
+    try {
+      var batches = 0L
+      // the binaryFile source's fixed schema, required explicitly for streams
+      val binaryFileSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
+        org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
+      val reader = spark.readStream.format("binaryFile")
+        .schema(binaryFileSchema)
+        .option("pathGlobFilter", "segment-*.bin")
+      maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
+      val files = reader.load(feedDir)
+        .select(col("path")) // content stays in the source; applyBatch re-reads
+      val query = files.writeStream
+        .queryName("graft-cdc-ingest")
+        .option("checkpointLocation", ckpt)
+        .trigger(trigger)
+        .foreachBatch { (batchDf: org.apache.spark.sql.DataFrame, batchId: Long) =>
+          // The batch content is only a trigger; the authoritative work list
+          // is a fresh directory listing filtered to the contiguous run above
+          // the lake watermark (delivery order across micro-batches is not
+          // monotone in segment id — see scaladoc).
+          batchDf.select(count(lit(1))).collect() // force the source to advance
+          if (applyContiguous(spark, table, feedDir, config)) batches += 1
+          mviewRoot.foreach(r => refreshMview(spark, table, r))
+        }
+        .start()
+      try query.awaitTermination() finally query.stop()
+      // AvailableNow stops after draining what the SOURCE saw; a segment that
+      // landed mid-drain may still be waiting on disk — apply the remainder.
+      if (trigger == Trigger.AvailableNow()) {
+        while (applyContiguous(spark, table, feedDir, config)) batches += 1
         mviewRoot.foreach(r => refreshMview(spark, table, r))
       }
-      .start()
-    query.awaitTermination()
-    // AvailableNow stops after draining what the SOURCE saw; a segment that
-    // landed mid-drain may still be waiting on disk — apply the remainder.
-    if (trigger == Trigger.AvailableNow()) {
-      while (applyContiguous(spark, table, feedDir, config)) batches += 1
-      mviewRoot.foreach(r => refreshMview(spark, table, r))
-    }
-    batches
+      batches
+    } finally if (checkpointDir.isEmpty)
+      LakeTable.deleteRecursively(java.nio.file.Paths.get(ckpt))
   }
 
   /** Continuous downstream maintenance: after each micro-batch commit, roll

@@ -1276,9 +1276,11 @@ object LakeTable {
   /** Bucket assignment — pure function of the key so it never needs to be
     * stored: `pmod(hash(url), numBuckets)` (north rule's salted url-hash
     * partitioning of the lake layout). Uses Spark's murmur3 `hash` so that
-    * when the MERGE join runs with `repartition(numBuckets, url)`, Spark's
-    * HashPartitioning index EQUALS the bucket id — the join output is
-    * already bucket-clustered and the write needs no extra shuffle. */
+    * when the MERGE join runs with `repartition(P, url)` for a divisor P of
+    * `numBuckets`, Spark's HashPartitioning index is the bucket id mod P
+    * (partition = bucket mod P) — every bucket sits whole in one
+    * partition, the join output is already bucket-clustered and the write
+    * needs no extra shuffle. */
   def bucketExpr(numBuckets: Int): org.apache.spark.sql.Column =
     pmod(hash(col("url")), lit(numBuckets)).cast("int")
 

@@ -27,6 +27,9 @@ import graft.ops.AsofJoin
   * contract in-JVM. */
 object SystemQueries {
 
+  /** The staging dirs this JVM made ([[tmpDir]]), deleted at its exit. */
+  private val ownScratch = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
   /** RAM-backed scratch for query-internal staging (streaming checkpoints,
     * sinks, synthesized feeds, replay tables): this box's /tmp sits on a
     * virtualized disk with high-variance latency (the same measurement that
@@ -43,10 +46,13 @@ object SystemQueries {
       if (Files.isWritable(shm)) shm.resolve("graft-q")
       else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft-q")
     Files.createDirectories(base)
-    // stale-run sweep: query staging dirs cannot be deleted at query time
-    // (the returned DataFrames read from them lazily), so each fresh JVM
-    // clears leftovers older than 6 h — bounds tmpfs growth across rounds
-    // without racing a concurrently-running sibling JVM
+    // query staging dirs cannot be deleted at query time (the returned
+    // DataFrames read from them lazily): this JVM deletes its own at exit
+    // (see tmpDir), and each fresh JVM clears leftovers older than 6 h — a
+    // killed JVM's — without racing a concurrently-running sibling JVM
+    sys.addShutdownHook(ownScratch.forEach { p =>
+      try LakeTable.deleteRecursively(p) catch { case _: Exception => () }
+    })
     try {
       val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
       LakeTable.listDir(base).foreach { p =>
@@ -58,8 +64,11 @@ object SystemQueries {
     base
   }
 
-  private def tmpDir(prefix: String): java.nio.file.Path =
-    Files.createTempDirectory(ScratchBase, prefix)
+  private def tmpDir(prefix: String): java.nio.file.Path = {
+    val d = Files.createTempDirectory(ScratchBase, prefix)
+    ownScratch.add(d)
+    d
+  }
 
   /** Run `body` with `spark.sql.shuffle.partitions` DERIVED from the input
     * size instead of the session constant (guide §2.2: size shuffle

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.feed.{FeedGen, FeedSpec}
@@ -82,45 +86,19 @@ class PlanSpec extends SparkTestBase {
     assert(plan.contains("_salt"), s"phase-1 exchange lost its salt:\n$plan")
   }
 
-  test("merge path: bucket-aligned inputs add no exchange after the join") {
-    // end-to-end ingest, then re-run the same merge shape and count
-    // exchanges: key-winner source (1: repartition to buckets) + target
-    // (1: repartition to buckets) + NONE after the full-outer join
-    val spec = FeedSpec(seed = 3L, numEvents = 2000, numUrls = 300,
-      eventsPerSegment = 500)
-    val dir = tmpDir("planfeed")
-    FeedGen.writeSegments(spec, dir)
-    val table = LakeTable.create(tmpDir("plantbl"), CdcIngest.PagesSchemaV1, 8)
-    CdcIngest.run(spark, table, dir, IngestConfig(numBuckets = 8, segmentsPerBatch = 10))
-    // the committed state reads back with one row per surviving url and
-    // the files are bucket-partitioned — the write happened without a
-    // post-join exchange (asserted structurally: every data file name
-    // carries its bucket id, and bucket = pmod(hash(url), 8) holds row-wise)
-    val snap = table.currentSnapshot()
-    val byBucket = table.readRaw(spark, snap)
-      .withColumn("b", LakeTable.bucketExpr(8))
-    assert(byBucket.filter(col("b") < 0 || col("b") >= 8).isEmpty)
-    snap.files.foreach(f => assert(f.path.contains(f"b${f.bucket}%05d"),
-      s"file ${f.path} not bucket-scoped"))
-    // and the per-file rows from footers sum to the physical row count
-    assert(snap.files.map(_.rows).sum == table.readRaw(spark, snap).count())
-  }
+  private val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
 
-  test("compaction and rebucket writes: one shuffle and one _bucket-led sort each") {
+  /** Run `body` with a write-plan capture: the function it is handed runs
+    * one action and returns the executed plan of the one parquet write
+    * that action issues. A marker write goes first: listener events
+    * arrive in order, so once the marker's arrives no earlier write is
+    * still in flight. */
+  private def capturingWrites[T](body: ((() => Unit) => SparkPlan) => T): T = {
     import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-    import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.util.QueryExecutionListener
-    val spec = FeedSpec(seed = 5L, numEvents = 1000, numUrls = 200, eventsPerSegment = 500)
-    val dir = tmpDir("rwplanfeed")
-    FeedGen.writeSegments(spec, dir)
-    val table = LakeTable.create(tmpDir("rwplantbl"), CdcIngest.PagesSchemaV1, 8)
-    CdcIngest.run(spark, table, dir, IngestConfig(numBuckets = 8, segmentsPerBatch = 1))
-    val aqe = new AdaptiveSparkPlanHelper {}
     // the write command runs inside AQE's final plan (a result query stage)
     val writes = new LinkedBlockingQueue[(String, SparkPlan)]()
     val listener = new QueryExecutionListener {
@@ -133,33 +111,142 @@ class PlanSpec extends SparkTestBase {
           }
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    /** The plan of the one write `run` issues. A marker write goes first:
-      * listener events arrive in order, so once the marker's arrives no
-      * earlier write (the ingest's) is still in flight. */
-    def writePlan(run: => Unit): SparkPlan = {
+    def writePlan(run: () => Unit): SparkPlan = {
       val marker = tmpDir("marker")
       spark.range(1).write.mode("overwrite").parquet(marker)
       Iterator.continually(writes.poll(30, TimeUnit.SECONDS))
         .find(w => w == null || w._1.endsWith(marker))
-      run
+      run()
       Option(writes.poll(30, TimeUnit.SECONDS)).getOrElse(fail("no write captured"))._2
     }
     spark.listenerManager.register(listener)
-    try Seq[(String, () => Unit)](
-        "compact" -> (() => CdcIngest.compact(spark, table)),
-        "rebucket" -> (() => CdcIngest.rebucket(spark, table, 16))).foreach {
-      case (name, rewrite) =>
-        val plan = writePlan(rewrite())
-        val shuffles = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
-        val sorts = aqe.collect(plan) { case s: SortExec => s }
-        assert(shuffles.size == 1, s"$name: expected 1 shuffle, found ${shuffles.size}:\n$plan")
-        assert(sorts.size == 1, s"$name: expected 1 sort, found ${sorts.size}:\n$plan")
-        val keys = sorts.head.sortOrder.map(_.child match {
+    try body(writePlan _) finally spark.listenerManager.unregister(listener)
+  }
+
+  private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+
+  /** The exchange's partitioning when it hashes `url` alone — a
+    * bucket-aligned exchange. */
+  private def urlHash(e: ShuffleExchangeExec): Option[HashPartitioning] =
+    e.outputPartitioning match {
+      case h: HashPartitioning if h.expressions.map {
           case a: Attribute => a.name
-          case e => e.sql
-        })
-        assert(keys == Seq(LakeTable.BucketCol, "warc_ts", "url"), s"$name sorts by $keys")
-    } finally spark.listenerManager.unregister(listener)
+          case x => x.sql
+        } == Seq("url") => Some(h)
+      case _ => None
+    }
+
+  test("merge path: bucket-aligned inputs add no exchange after the join") {
+    import org.apache.spark.sql.execution.datasources.WriteFilesExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.internal.SQLConf
+    // 50-event (~9 KB) segments: one is small next to the table, so it
+    // takes the pruned/MoR path; a run of 99 is large enough for the bulk
+    // path against the 16 seeded bucket files (~2 MB, url blooms included)
+    val spec = FeedSpec(seed = 3L, numEvents = 5300, numUrls = 1500,
+      eventsPerSegment = 50)
+    val dir = tmpDir("planfeed")
+    val segs = FeedGen.writeSegments(spec, dir).zipWithIndex
+      .map { case (p, i) => i.toLong -> p.toString }
+    val table = LakeTable.create(tmpDir("plantbl"), CdcIngest.PagesSchemaV1, 16)
+    // 16 buckets on local[4] with KB-sized inputs: P = 4 < numBuckets
+    val p = CdcIngest.alignedPartitions(16, spark.sparkContext.defaultParallelism,
+      1L, spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    assert(p == 4, s"expected P = 4 on local[4], got $p")
+    // seed the table: a first load has an empty target, which AQE drops
+    CdcIngest.applyBatch(spark, table, segs.take(1), IngestConfig())
+    /** The nodes between the write and the first join below it. */
+    def aboveJoin(n: SparkPlan): Seq[SparkPlan] = n match {
+      case _: BaseJoinExec => Nil
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        aboveJoin(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: aboveJoin(q.plan)
+      case _ => n +: n.children.flatMap(aboveJoin)
+    }
+    capturingWrites { writePlan =>
+      def commit(name: String, batch: Seq[(Long, String)], strategy: String,
+          cfg: IngestConfig): BaseJoinExec = {
+        val plan = writePlan(() => CdcIngest.applyBatch(spark, table, batch, cfg))
+        assert(table.currentSnapshot().metrics("strategy") == strategy,
+          s"$name: took ${table.currentSnapshot().metrics("strategy")}")
+        val write = aqe.collectFirst(plan) { case w: WriteFilesExec => w }
+          .getOrElse(fail(s"$name: no WriteFiles in:\n$plan"))
+        val join = aqe.collectFirst(write) { case j: BaseJoinExec => j }
+          .getOrElse(fail(s"$name: no join under the write:\n$plan"))
+        assert(!aboveJoin(write).exists(_.isInstanceOf[ShuffleExchangeExec]),
+          s"$name: an exchange sits between the join and the write:\n$plan")
+        shuffles(plan).flatMap(urlHash).foreach(h =>
+          assert(h.numPartitions == p, s"$name: aligned exchange $h, expected $p:\n$plan"))
+        join
+      }
+      // bulk: both inputs hashed into P
+      val bulk = commit("bulk", segs.slice(1, 100), "bulk", IngestConfig())
+      assert(Seq(bulk.left, bulk.right).forall(s => shuffles(s).flatMap(urlHash).size == 1),
+        s"bulk: each merge input must be hashed by url once:\n$bulk")
+      // pruned: the cached winners are already hashed; the target is hashed into P
+      val pruned = commit("pruned", segs.slice(100, 101), "pruned", IngestConfig())
+      assert(shuffles(pruned.left).flatMap(urlHash).size == 1 && shuffles(pruned.right).isEmpty,
+        s"pruned: only the target may be hashed:\n$pruned")
+      // MoR: the optimizer broadcasts the target — no shuffle on either side
+      val mor = commit("mor", segs.slice(101, 102), "mor", IngestConfig(mergeOnRead = true))
+      assert(mor.isInstanceOf[BroadcastHashJoinExec] &&
+        mor.asInstanceOf[BroadcastHashJoinExec].buildSide == BuildRight,
+        s"mor: the target is not the broadcast side:\n$mor")
+      assert(aqe.collect(mor.right) { case b: BroadcastExchangeExec => b }.nonEmpty &&
+        shuffles(mor).isEmpty, s"mor: the target must be broadcast, not shuffled:\n$mor")
+      // MoR with broadcasts off: the target is co-partitioned to the
+      // winners' url hash, once; the cached winners are not re-shuffled
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      val shuffled = try commit("mor, no broadcast", segs.slice(102, 103), "mor",
+        IngestConfig(mergeOnRead = true))
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val tgt = shuffles(shuffled.right)
+      assert(tgt.size == 1 && urlHash(tgt.head).exists(_.numPartitions == p),
+        s"mor, no broadcast: the target needs exactly one hashpartitioning(url, $p):\n$shuffled")
+      assert(shuffles(shuffled.left).isEmpty,
+        s"mor, no broadcast: the winners were re-shuffled:\n$shuffled")
+    }
+    // the committed files are bucket-clustered: every physical row sits in
+    // a file named for its bucket
+    val snap = table.currentSnapshot()
+    val physical = spark.read.parquet(snap.files.map(f => table.root.resolve(f.path).toString): _*)
+    val misplaced = physical
+      .select(col("_metadata.file_name"), LakeTable.bucketExpr(16).as("b")).distinct().collect()
+      .filterNot(r => r.getString(0).contains(f"-b${r.getInt(1)}%05d-"))
+    assert(misplaced.isEmpty, s"rows outside their file's bucket: ${misplaced.toSeq}")
+    // and the per-file rows from footers sum to the physical row count
+    assert(snap.files.map(_.rows).sum == physical.count())
+  }
+
+  test("compaction and rebucket writes: one shuffle and one _bucket-led sort each") {
+    import org.apache.spark.sql.execution.SortExec
+    val spec = FeedSpec(seed = 5L, numEvents = 1000, numUrls = 200, eventsPerSegment = 500)
+    val dir = tmpDir("rwplanfeed")
+    FeedGen.writeSegments(spec, dir)
+    val table = LakeTable.create(tmpDir("rwplantbl"), CdcIngest.PagesSchemaV1, 8)
+    CdcIngest.run(spark, table, dir, IngestConfig(numBuckets = 8, segmentsPerBatch = 1))
+    capturingWrites { writePlan =>
+      Seq[(String, () => Unit)](
+          "compact" -> (() => CdcIngest.compact(spark, table)),
+          "rebucket" -> (() => CdcIngest.rebucket(spark, table, 16))).foreach {
+        case (name, rewrite) =>
+          val plan = writePlan(rewrite)
+          val sorts = aqe.collect(plan) { case s: SortExec => s }
+          assert(shuffles(plan).size == 1,
+            s"$name: expected 1 shuffle, found ${shuffles(plan).size}:\n$plan")
+          assert(sorts.size == 1, s"$name: expected 1 sort, found ${sorts.size}:\n$plan")
+          val keys = sorts.head.sortOrder.map(_.child match {
+            case a: Attribute => a.name
+            case e => e.sql
+          })
+          assert(keys == Seq(LakeTable.BucketCol, "warc_ts", "url"), s"$name sorts by $keys")
+      }
+    }
   }
 
   test("DV read: positional vectors apply as a broadcast anti-join, zero shuffles") {

@@ -166,4 +166,29 @@ class StreamingIngestSpec extends SparkTestBase {
     assert(table.currentSnapshot().version == v1, "re-delivery must not re-apply")
     assert(table.read(spark).count() == oracleCount(spec))
   }
+
+  test("a run without a checkpoint dir deletes its own; a caller's dir stays") {
+    import java.nio.file.{Files, Paths}
+    val spec = FeedSpec(seed = 59L, numEvents = 600, numUrls = 100, eventsPerSegment = 300)
+    val feed = tmpDir("sfeed7")
+    FeedGen.writeSegments(spec, feed)
+    val table = LakeTable.create(tmpDir("stbl7"), CdcIngest.PagesSchemaV1, 8)
+    // the default checkpoint goes to /dev/shm, or the JVM temp dir without it
+    def defaultCkpts(): Set[java.nio.file.Path] =
+      Seq("/dev/shm", System.getProperty("java.io.tmpdir")).map(Paths.get(_))
+        .filter(Files.isDirectory(_)).flatMap(LakeTable.listDir)
+        .filter(_.getFileName.toString.startsWith("graft-stream-ckpt")).toSet
+    val before = defaultCkpts()
+    StreamingIngest.run(spark, table, feed, IngestConfig(numBuckets = 8))
+    assert(table.currentSnapshot().watermarkSegment == 1)
+    val left = defaultCkpts() -- before
+    assert(left.isEmpty, s"default checkpoint dirs left behind: $left")
+    val ckpt = tmpDir("sckpt7")
+    FeedGen.writeSegments(spec.copy(numEvents = 900), feed)
+    StreamingIngest.run(spark, table, feed, IngestConfig(numBuckets = 8),
+      checkpointDir = Some(ckpt))
+    assert(table.currentSnapshot().watermarkSegment == 2)
+    assert(Files.isDirectory(Paths.get(ckpt, "offsets")),
+      "a caller-supplied checkpoint must survive the run")
+  }
 }
