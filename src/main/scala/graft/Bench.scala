@@ -335,7 +335,7 @@ object Bench {
       if (cfg.isExecutorMode) awaitExecutors(spark, cfg.execs)
       warmupDir.foreach { wd => // JIT + codegen warm-up through the same path
         val wt = LakeTable.create(tmpDir("benchwarm"), CdcIngest.PagesSchemaV1, buckets)
-        CdcIngest.run(spark, wt, wd, IngestConfig(buckets, 16, segmentsPerBatch = 100))
+        CdcIngest.run(spark, wt, wd, IngestConfig(buckets, segmentsPerBatch = 100))
       }
       val tally = new CpuTally
       spark.sparkContext.addSparkListener(tally)
@@ -345,7 +345,7 @@ object Bench {
       // collect, commit, footer reads) is serial — Amdahl overhead that
       // would otherwise cap the measurable executor-scaling efficiency
       val snaps = CdcIngest.run(spark, table, feedDir,
-        IngestConfig(buckets, 16, segmentsPerBatch = 1000))
+        IngestConfig(buckets, segmentsPerBatch = 1000))
       val secs = (System.nanoTime() - t0) / 1e9
       // listener events post asynchronously; give the bus a moment to drain
       Thread.sleep(500)

@@ -13,7 +13,7 @@ import graft.lake.LakeTable
   * Usage:
   *   MainIngest gen    <feedDir> <numEvents> <numUrls> [eventsPerSegment] [evolveAt]
   *   MainIngest init   <tableDir> [numBuckets]
-  *   MainIngest ingest <tableDir> <feedDir> [segmentsPerBatch] [saltBuckets]
+  *   MainIngest ingest <tableDir> <feedDir> [segmentsPerBatch] [maxFileRows] [--mor [--dv]]
   *   MainIngest show   <tableDir>
   *
   * `ingest` is resumable: the checkpoint is the committed snapshot
@@ -35,7 +35,7 @@ object MainIngest {
       """usage:
         |  MainIngest gen    <feedDir> <numEvents> <numUrls> [eventsPerSegment] [evolveAtEvent]
         |  MainIngest init   <tableDir> [numBuckets]
-        |  MainIngest ingest <tableDir> <feedDir> [segmentsPerBatch] [saltBuckets] [maxFileRows] [--mor [--dv]]
+        |  MainIngest ingest <tableDir> <feedDir> [segmentsPerBatch] [maxFileRows] [--mor [--dv]]
         |  MainIngest stream <tableDir> <feedDir> [checkpointDir] [mviewDir] [--mor [--dv]]
         |  MainIngest compact <tableDir> [--cluster col,col | --zorder col,col] [tombstoneHorizonIso] [minFilesPerBucket] [maxFileRows]
         |  MainIngest rebucket <tableDir> <newBuckets> [maxFileRows]
@@ -113,15 +113,18 @@ object MainIngest {
       val mor = rest0.contains("--mor")
       val dv = rest0.contains("--dv")
       val rest = rest0.filterNot(a => a == "--mor" || a == "--dv")
-      val perBatch = rest.headOption.map(_.toInt).getOrElse(4)
-      val salt = rest.drop(1).headOption.map(_.toInt).getOrElse(16)
-      val maxFileRows = rest.drop(2).headOption.map(_.toLong).getOrElse(0L)
+      val perBatch = rest.headOption.fold(Option(4))(_.toIntOption).getOrElse(0)
+      val maxFileRows = rest.lift(1).fold(Option(0L))(_.toLongOption).getOrElse(-1L)
+      // at most two positionals, both integers (a non-integer reads as out
+      // of range): an old `… 4 16 0` call (with the former saltBuckets)
+      // must fail, not be read as maxFileRows = 16
+      if (rest.size > 2 || perBatch <= 0 || maxFileRows < 0) usage()
       val spark = session()
       val table = LakeTable.load(tableDir)
       val before = table.currentSnapshot()
       val t0 = System.nanoTime()
       val snaps = CdcIngest.run(spark, table, feedDir,
-        IngestConfig(numBuckets = before.numBuckets, saltBuckets = salt,
+        IngestConfig(numBuckets = before.numBuckets,
           segmentsPerBatch = perBatch, maxFileRows = maxFileRows,
           mergeOnRead = mor, deleteVectors = dv))
       val secs = (System.nanoTime() - t0) / 1e9

@@ -3,7 +3,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship: the CDC engine end-to-end — deterministic binary WAL feed
-    * replayed through decode → salted LWW dedup → MERGE into a lake table;
+    * replayed through decode → LWW dedup → MERGE into a lake table;
     * returns the final live page state (driver smoke-checks rows>0). */
   def entry(spark: SparkSession): DataFrame =
     graft.queries.SystemQueries.cdcReplay(spark, "/root/testdata/sf0.001")

@@ -26,7 +26,6 @@ final case class FeedDef(
     feedDir: String,
     numBuckets: Int = 32,
     segmentsPerBatch: Int = 4,
-    saltBuckets: Int = 16,
     expectedCount: Option[Long] = None,
     tolerancePct: Double = 0.0,
     dependsOn: Seq[String] = Seq.empty,
@@ -101,7 +100,6 @@ object Registry {
         feedDir = req("feedDir"),
         numBuckets = Option(n.get("numBuckets")).map(_.asInt()).getOrElse(32),
         segmentsPerBatch = Option(n.get("segmentsPerBatch")).map(_.asInt()).getOrElse(4),
-        saltBuckets = Option(n.get("saltBuckets")).map(_.asInt()).getOrElse(16),
         expectedCount = Option(n.get("expectedCount")).map(_.asLong()),
         tolerancePct = Option(n.get("tolerancePct")).map(_.asDouble()).getOrElse(0.0),
         dependsOn = Option(n.get("dependsOn")).map(
@@ -140,7 +138,7 @@ object Registry {
         else LakeTable.create(f.tableDir, CdcIngest.PagesSchemaV1, f.numBuckets)
       val snaps = CdcIngest.run(spark, table, f.feedDir,
         IngestConfig(numBuckets = table.currentSnapshot().numBuckets,
-          saltBuckets = f.saltBuckets, segmentsPerBatch = f.segmentsPerBatch))
+          segmentsPerBatch = f.segmentsPerBatch))
       val events = snaps.flatMap(_.metrics.get("events"))
         .map(_.toString.toDouble.toLong).sum
       val live = table.read(spark)

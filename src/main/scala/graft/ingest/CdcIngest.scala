@@ -20,10 +20,12 @@ import graft.model.ChangeEvent
   *     native Catalyst `decode_record` expression (codegen'd, JVM-native;
   *     replaces the reference's Python UDF decode, encoding.py:279-306);
   *  2. in-batch LWW dedup, winner = max_by (warc_ts, seq) — SURVEY.md §2.6.
-  *     A trickle batch runs [[lwwDedup]]: phase 1 groups by (url, salt)
-  *     with map-side partial aggregation (hot-domain skew is reduced before
-  *     the shuffle), phase 2 groups by url. A bulk batch decides winners on
-  *     a key-only pass and decodes only them ([[dedupViaKeyBroadcast]]);
+  *     Every batch ends in ONE aggregation, [[lwwDedup]]: one url-hash
+  *     exchange, one groupBy(url). A bulk batch (large next to the table)
+  *     first runs a key-only pass that decides the winners and decodes only
+  *     their records ([[dedupViaKeyBroadcast]]), so the aggregation sees
+  *     one row per url plus at-least-once copies; a trickle batch feeds it
+  *     every decoded event;
   *  3. additive schema evolution — v2 records promote `extra` entries to
   *     typed columns; the table schema widens, old rows read as null
   *     (schema_validator.py:116-128 promotion semantics);
@@ -36,9 +38,14 @@ import graft.model.ChangeEvent
   *     rename of the snapshot JSON (exactly-once; idempotent on replay).
   *
   * Scale notes (100 TB): parallelism of decode = #segments; the only
-  * shuffles are the two dedup aggregations (partial-agg'd, keyed by url —
-  * salting bounds per-reducer hot-key volume) and the merge target's
-  * url hash. Every bucket-aligned exchange hashes url into P partitions,
+  * shuffles are the dedup's url hash (preceded, on a bulk batch, by the
+  * key pass's combined key rows) and the merge target's url hash. Hot keys
+  * are bounded before that exchange: on the bulk path the key pass's
+  * map-side combiner folds each url to one row per task before any
+  * payload moves; a trickle batch is at most `segmentsPerBatch` segments
+  * ([[run]], [[StreamingIngest]]) and, without merge-on-read, under a
+  * quarter of the table's bytes, which caps any one url's group.
+  * Every bucket-aligned exchange hashes url into P partitions,
   * P a divisor of `numBuckets` sized to the cluster and the data
   * ([[alignedPartitions]]), so partition = bucket mod P: each bucket
   * lands whole in one task and the merge output is written with no
@@ -53,7 +60,6 @@ object CdcIngest {
   final case class IngestConfig(
       /** Not read by the engine: every write takes the snapshot's `numBuckets`. */
       numBuckets: Int = 32,
-      saltBuckets: Int = 16,
       segmentsPerBatch: Int = 4,
       // Target rows per data file (0 = unlimited). At 100 TB a bucket is
       // tens of GB; without a cap the merge writes ONE file per bucket —
@@ -359,36 +365,29 @@ object CdcIngest {
     }
   }
 
-  /** Bulk dedup: LWW winners are decided on a key-only pass (the
-    * map-side [[KeyCombiner]] — zero per-event allocation, shuffle volume
-    * bounded by per-task distinct urls), the winner seq-set (one entry per
-    * url in the batch) is collected to the driver and broadcast, and the
-    * payload pass filters records by seq BEFORE copying or decoding them —
-    * losers never materialize anywhere. Above `maxCollectedKeys` winners
-    * the payload pass joins the events against the persisted key
-    * aggregation instead of a driver-side set — the key aggregation is
-    * never recomputed. Segment bytes are read once per pass at most: the
-    * key pass populates the executor-local [[SegmentCache]] and the
-    * payload pass consumes it.
-    * Returns (winners df, (events, minSeq, maxSeq), max schema version
-    * seen in the batch — from the key rows, so the caller's evolution
-    * decision needs no driver-side segment reads). The winners are
-    * HashPartitioning(url, urlPartitions); with `urlPartitions` a divisor
-    * of the table's bucket count ([[alignedPartitions]]) each bucket's
-    * winners sit in one partition. */
+  /** Bulk pre-filter in front of [[lwwDedup]]: LWW winners are decided on
+    * a key-only pass (the map-side [[KeyCombiner]] — zero per-event
+    * allocation, shuffle volume bounded by per-task distinct urls), the
+    * winner seq-set (one entry per url in the batch) is collected to the
+    * driver and broadcast, and the payload pass filters records by seq
+    * BEFORE copying or decoding them — losers never materialize anywhere.
+    * Above `maxCollectedKeys` winners the payload pass joins the events
+    * against the persisted key aggregation instead of a driver-side set —
+    * the key aggregation is never recomputed. Segment bytes are read once
+    * per pass at most: the key pass populates the executor-local
+    * [[SegmentCache]] and the payload pass consumes it.
+    * Returns (the decoded records that passed the winner filter —
+    * at-least-once copies of a winner share its seq and all pass, so the
+    * caller still runs [[lwwDedup]] — (events, minSeq, maxSeq), max schema
+    * version seen in the batch — from the key rows, so the caller's
+    * evolution decision needs no driver-side segment reads). The key job
+    * and the winner collect run before this returns; the payload pass is
+    * lazy. */
   def dedupViaKeyBroadcast(
       spark: SparkSession,
       segmentPaths: Seq[String],
-      urlPartitions: Int,
       maxCollectedKeys: Int = 4000000): (DataFrame, (Long, Long, Long), Int) = {
     import spark.implicits._
-    val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
-    var tM = System.nanoTime()
-    def mk(ph: String): Unit = if (trace) {
-      val now = System.nanoTime()
-      System.err.println(f"[trace]   $ph%-16s ${(now - tM) / 1e9}%7.3f s")
-      tM = now
-    }
     val winnerKeys = keyStats(spark, segmentPaths)
       .groupBy(col("h1"), col("h2"))
       .agg(max_by(struct(col("wts"), col("wseq")), struct(col("wts"), col("wseq"))).as("_w"),
@@ -434,19 +433,6 @@ object CdcIngest {
       if (pmx > mx) mx = pmx
       if (psv > maxSv) maxSv = psv
     }
-    mk("keyjob+collect")
-
-    /** One row per url (at-least-once duplicates of a winner share its
-      * seq), clustered for the merge join. */
-    def collapse(decoded: DataFrame): DataFrame = {
-      val payloadCols = decoded.columns.filterNot(_ == "url")
-      decoded
-        .repartition(urlPartitions, col("url"))
-        .groupBy(col("url"))
-        .agg(max_by(struct(payloadCols.map(col).toSeq: _*),
-          struct(col("warc_ts"), col("seq"))).as("_w"))
-        .select(col("url") +: payloadCols.map(c => col(s"_w.$c").as(c)).toSeq: _*)
-    }
 
     val winners = if (!overCap) {
       // packed long[]s: 8 B/key transferred (vs ~100+ B for boxed tuple
@@ -460,7 +446,7 @@ object CdcIngest {
       // (dereferenced INSIDE the task — a `set.contains` closure made on
       // the driver would serialize the whole set into every task binary)
       // and copy out only the winners' record slices
-      collapse(decodeRecords(segmentScan(spark, segmentPaths)(_.flatMap {
+      decodeRecords(segmentScan(spark, segmentPaths)(_.flatMap {
         case (p, bytes) =>
           val keep = setBc.value
           val hasCrc = RecordCodec.segmentHasCrc(bytes)
@@ -473,7 +459,7 @@ object CdcIngest {
                   s"winner record CRC mismatch in $p at offset $off")
               java.util.Arrays.copyOfRange(bytes, off, off + len)
             }
-      }).toDF("rec")))
+      }).toDF("rec"))
     } else {
       // huge-batch fallback: relational join of the (CRC-verified) events
       // against the persisted winner-seq aggregation — bounded driver
@@ -482,57 +468,39 @@ object CdcIngest {
       val recs = segmentScan(spark, segmentPaths)(_.flatMap { case (_, bytes) =>
         RecordCodec.readSegment(bytes).map(r => (RecordCodec.seqAt(r, 0), r))
       }).toDF("seq", "rec")
-      collapse(decodeRecords(
-        recs.join(winnerKeys.select(col("wseq")), col("seq") === col("wseq"))))
+      decodeRecords(
+        recs.join(winnerKeys.select(col("wseq")), col("seq") === col("wseq")))
     }
-    mk("plan-winners")
     (winners, (ev, mn, mx), maxSv)
   }
 
   // -------------------------------------------------------------------
-  // 2. salted two-phase LWW dedup
+  // 2. LWW dedup
   // -------------------------------------------------------------------
 
-  /** One winner row per url: max by (warc_ts, seq) — the trickle (pruned
-    * and merge-on-read) dedup. Adds bookkeeping columns `_n` (events
-    * folded) and `_sv` (max schema version seen over ALL folded events).
-    * Phase 1 salts by `pmod(seq, salt)` — the salt must split same-key rows,
-    * so it derives from the event position, not the key; phase 2 sees at
-    * most `salt` rows per url regardless of how hot the domain is. */
-  def lwwDedup(events: DataFrame, salt: Int, urlPartitions: Option[Int] = None): DataFrame = {
-    val payload = struct(events.columns.map(col).toSeq: _*)
-    val ord = struct(col("warc_ts"), col("seq"))
-    val phase1 = events
-      .withColumn("_salt", pmod(col("seq"), lit(salt.toLong)))
-      .groupBy(col("url"), col("_salt"))
-      .agg(
-        max_by(payload, ord).as("_w"),
-        count(lit(1)).as("_n"),
-        max(col("schema_version")).as("_sv"))
-    // When the caller needs the output clustered for a downstream join,
-    // phase 2's exchange IS that clustering: repartition(n, url) satisfies
-    // the groupBy(url) distribution and none is needed later (with n a
-    // divisor of the bucket count, partition = bucket mod n). Total
-    // exchanges in this dedup: exactly two — phase 1's partial-agg'd
-    // (url, _salt) distribution (the skew-defusing one) and this alignment
-    // repartition — pinned by PlanSpec.
-    val rep = urlPartitions match {
-      case Some(n) => phase1.repartition(n, col("url"))
-      case None    => phase1
-    }
-    rep
+  /** One winner row per url: max by (warc_ts, seq) — the one LWW
+    * aggregation of both ingest paths. Adds bookkeeping columns `_n`
+    * (events folded) and `_sv` (max schema version seen over ALL folded
+    * events). One exchange: `repartition(urlPartitions, url)` satisfies the
+    * groupBy(url) distribution and, with `urlPartitions` a divisor of the
+    * bucket count ([[alignedPartitions]]), is also the bucket alignment
+    * (partition = bucket mod `urlPartitions`) — pinned by PlanSpec. Hot
+    * keys are bounded before this call: see the header's scale notes. */
+  def lwwDedup(events: DataFrame, urlPartitions: Int): DataFrame =
+    events
+      .repartition(urlPartitions, col("url"))
       .groupBy(col("url"))
       .agg(
-        max_by(col("_w"), struct(col("_w.warc_ts"), col("_w.seq"))).as("_w"),
-        sum(col("_n")).as("_n"),
-        max(col("_sv")).as("_sv"))
-      // `url` is the grouping key itself, not `_w.url`: the output then
-      // keeps the alignment's HashPartitioning(url, n), so a join against
+        max_by(struct(events.columns.filterNot(_ == "url").map(col).toSeq: _*),
+          struct(col("warc_ts"), col("seq"))).as("_w"),
+        count(lit(1)).as("_n"),
+        max(col("schema_version")).as("_sv"))
+      // `url` is the grouping key itself, not carried in `_w`: the output
+      // then keeps HashPartitioning(url, urlPartitions), so a join against
       // it (also through a cache) adds no exchange on this side
       .select(events.columns.map(c =>
         if (c == "url") col("url") else col(s"_w.$c").as(c)).toSeq :+
         col("_n") :+ col("_sv"): _*)
-  }
 
   // -------------------------------------------------------------------
   // batch apply
@@ -667,6 +635,20 @@ object CdcIngest {
 
     val newVersion = snap.version + 1
 
+    // the one LWW aggregation: a bulk batch feeds it only the records that
+    // passed the key pass's winner filter (keyStats' map-side combiner
+    // bounds hot keys before any payload moves), a trickle batch every event
+    val (keyPass, deduped) = {
+      val paths = segments.map(_._2)
+      val (events, kp) =
+        if (bulk) {
+          val (filtered, seqStats, maxSv) = dedupViaKeyBroadcast(spark, paths)
+          mark("key-pass")
+          (filtered, Some((seqStats, maxSv)))
+        } else (eventsDf(spark, paths), None)
+      (kp, lwwDedup(events, parts))
+    }
+
     /** merge inputs are hashed by url into `parts` partitions, so each
       * bucket's rows sit in one partition (`_bucket mod parts ==
       * partition id`) and NO post-join shuffle is needed. */
@@ -678,19 +660,15 @@ object CdcIngest {
     }
 
     val (newSchema, newFiles, carried, carriedDels, newDels, lineageRows, statsMap) =
-      if (bulk) {
+      keyPass match {
+      case Some(((evTotal, mnSeq, mxSeq), maxSv)) =>
         // ---- bulk path: single job, full-table merge, observe() stats ----
         val obs = org.apache.spark.sql.Observation(s"ingest-$batchId")
-        // no salt here: keyStats' map-side combiner absorbs hot keys
-        // before the shuffle, so the bulk key pass needs none (the salted
-        // two-phase form is lwwDedup, on the trickle path)
-        val (winnersDf, (evTotal, mnSeq, mxSeq), maxSv) =
-          dedupViaKeyBroadcast(spark, segments.map(_._2), parts)
         // evolution decision from the key pass's own sv statistics — the
         // eager key job has already run by this point
         val schema = evolvedSchema(maxSv)
         val dataCols = schema.fieldNames.toSeq
-        val src = alignToRenames(winnersDf)
+        val src = alignToRenames(deduped.drop("_n", "_sv"))
           .observe(obs,
             count(lit(1)).as("winners"),
             sum(when(col("op") === ChangeEvent.OpDelete, 1L).otherwise(0L)).as("deletes"))
@@ -714,11 +692,10 @@ object CdcIngest {
         (schema, files, Seq.empty[DataFileEntry],
           Seq.empty[graft.lake.DeleteFileEntry], Seq.empty[graft.lake.DeleteFileEntry],
           lineage, stats)
-      } else {
+      case None =>
         // ---- pruned path: pre-pass finds touched buckets, merge reads
         // only their files; untouched buckets carry over by reference ----
-        val winners = lwwDedup(eventsDf(spark, segments.map(_._2)),
-            config.saltBuckets, Some(parts))
+        val winners = deduped
           .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(numBuckets))
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {

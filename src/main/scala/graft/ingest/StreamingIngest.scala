@@ -15,7 +15,7 @@ import graft.lake.LakeTable
   * The WAL directory is tailed with the file streaming source
   * (`binaryFile` — new `segment-*.bin` files are discovered as they land);
   * each micro-batch's file list is handed to [[CdcIngest.applyBatch]],
-  * which performs decode → salted LWW dedup → MERGE → atomic snapshot
+  * which performs decode → LWW dedup → MERGE → atomic snapshot
   * commit.
   *
   * Exactly-once holds under BOTH coordination layers:

@@ -461,7 +461,7 @@ object SystemQueries {
     * `read_parquet` and independently re-fold the final table state
     * (LWW = `row_number() OVER (PARTITION BY url ORDER BY warc_ts DESC,
     * seq DESC) = 1`, delete winners dropped). That turns the engine's
-    * binary decode + salted dedup + MERGE replay into hash-checked oracle
+    * binary decode + LWW dedup + MERGE replay into hash-checked oracle
     * queries instead of rows-only self-certification — the reference's J1
     * full-outer validation (data_validator.py:292-337) made
     * machine-checkable. The path must be a compile-time constant because
@@ -533,7 +533,7 @@ object SystemQueries {
   }
 
   /** Replay the deterministic binary feed into a fresh lake table through
-    * the full engine path (decode → salted LWW dedup → MERGE → atomic
+    * the full engine path (decode → LWW dedup → MERGE → atomic
     * snapshot commits), multi-batch so cross-batch LWW and tombstones are
     * exercised. */
   private def replayTable(s: SparkSession): LakeTable = {

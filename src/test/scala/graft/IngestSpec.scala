@@ -220,9 +220,9 @@ class IngestSpec extends SparkTestBase {
     val spec = FeedSpec(seed = 71L, numEvents = 3000, numUrls = 500,
       eventsPerSegment = 600, evolveAtEvent = 1500, duplicateRatio = 0.1)
     val paths = graft.feed.FeedGen.writeSegments(spec, tmpDir("ddfb")).map(_.toString)
-    val (a, at, asv) = CdcIngest.dedupViaKeyBroadcast(spark, paths, 8)
+    val (a, at, asv) = CdcIngest.dedupViaKeyBroadcast(spark, paths)
     // cap of 1 forces the relational-join fallback; results must be equal
-    val (b, bt, bsv) = CdcIngest.dedupViaKeyBroadcast(spark, paths, 8,
+    val (b, bt, bsv) = CdcIngest.dedupViaKeyBroadcast(spark, paths,
       maxCollectedKeys = 1)
     assert(asv == bsv && asv == 2,
       s"key-pass schema-version stat: broadcast=$asv fallback=$bsv (feed evolves to v2)")
@@ -275,7 +275,21 @@ class IngestSpec extends SparkTestBase {
     val spec = FeedSpec(seed = 23L, numEvents = 4000, numUrls = 200,
       hotDomainWeight = 0.99, eventsPerSegment = 1000)
     val table = mkTable()
-    CdcIngest.run(spark, table, mkFeed(spec), IngestConfig(numBuckets = 8, saltBuckets = 8))
+    CdcIngest.run(spark, table, mkFeed(spec), IngestConfig(numBuckets = 8))
+    assertMatchesOracle(table, spec)
+  }
+
+  test("hot keys on the trickle path: 250 events per url in one lwwDedup match the oracle") {
+    // 4 urls, 1000-event segments, one segment per batch: every batch after
+    // the first load is a merge-on-read commit whose lwwDedup folds about
+    // 250 events into each url's group
+    val spec = FeedSpec(seed = 29L, numEvents = 5000, numUrls = 4,
+      eventsPerSegment = 1000)
+    val table = mkTable()
+    val snaps = CdcIngest.run(spark, table, mkFeed(spec),
+      IngestConfig(numBuckets = 8, segmentsPerBatch = 1, mergeOnRead = true))
+    assert(snaps.map(_.metrics("strategy")) == Seq("bulk", "mor", "mor", "mor", "mor"))
+    assert(snaps.tail.forall(_.metrics("events").toString.toLong == 1000L))
     assertMatchesOracle(table, spec)
   }
 

@@ -69,23 +69,6 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("lwwDedup with aligned partitioning plans exactly two shuffles (salt + align)") {
-    import spark.implicits._
-    val events = (1 to 1000)
-      .map(i => (s"https://d${i % 7}.example.com/p/$i", i.toLong,
-        new java.sql.Timestamp(1577836800000L + i), i % 3))
-      .toDF("url", "seq", "warc_ts", "schema_version")
-    // exactly TWO exchanges, each load-bearing: phase 1's distribution on
-    // (url, _salt) — the salted, partial-agg'd shuffle that bounds hot-key
-    // receive volume — and phase 2's repartition(n, url), which doubles as
-    // the bucket alignment so the groupBy(url) AND any downstream
-    // bucket-partitioned write reuse it (no third exchange may appear)
-    val plan = planString(CdcIngest.lwwDedup(events, salt = 4, urlPartitions = Some(8)))
-    val n = shuffleCount(plan)
-    assert(n == 2, s"expected exactly 2 exchanges, found $n:\n$plan")
-    assert(plan.contains("_salt"), s"phase-1 exchange lost its salt:\n$plan")
-  }
-
   private val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
 
   /** Run `body` with a write-plan capture: the function it is handed runs
@@ -136,6 +119,27 @@ class PlanSpec extends SparkTestBase {
         } == Seq("url") => Some(h)
       case _ => None
     }
+
+  test("lwwDedup plans exactly one exchange: hashpartitioning(url, n), REPARTITION_BY_NUM") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
+    val events = (1 to 1000)
+      .map(i => (s"https://d${i % 7}.example.com/p/$i", i.toLong,
+        new java.sql.Timestamp(1577836800000L + i), i % 3))
+      .toDF("url", "seq", "warc_ts", "schema_version")
+    // ONE exchange: the repartition(n, url) satisfies the groupBy(url)
+    // distribution and doubles as the bucket alignment, so neither the
+    // aggregation nor a downstream bucket-partitioned write adds another
+    val df = CdcIngest.lwwDedup(events, urlPartitions = 8)
+    val plan = planString(df)
+    val n = shuffleCount(plan)
+    assert(n == 1, s"expected exactly 1 exchange, found $n:\n$plan")
+    val ex = shuffles(df.queryExecution.executedPlan)
+    assert(ex.size == 1 && urlHash(ex.head).exists(_.numPartitions == 8) &&
+      ex.head.shuffleOrigin == REPARTITION_BY_NUM,
+      s"expected hashpartitioning(url, 8) from repartition:\n$plan")
+    assert(!plan.contains("_salt"), s"a salt column is back:\n$plan")
+  }
 
   test("merge path: bucket-aligned inputs add no exchange after the join") {
     import org.apache.spark.sql.execution.datasources.WriteFilesExec

@@ -779,7 +779,7 @@ class QueriesSpec extends SparkTestBase {
     import org.apache.spark.sql.expressions.Window
     // one user owns every second event — the group-state fold must handle a
     // batch slice of ~half the feed (primitive-array buffering, 8B/event)
-    val dir = java.nio.file.Files.createTempDirectory("sesshot")
+    val dir = java.nio.file.Paths.get(tmpDir("sesshot"))
     val rnd = new scala.util.Random(7)
     var tSec = 1577836800L
     val rows = (0 until 20000).map { i =>

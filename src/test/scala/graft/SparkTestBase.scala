@@ -14,6 +14,18 @@ object SparkTestBase {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.adaptive.enabled", "true")
     .getOrCreate()
+
+  /** The dirs [[SparkTestBase.tmpDir]] made in this JVM, deleted at its exit. */
+  private val ownDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  sys.addShutdownHook(ownDirs.forEach { p =>
+    try graft.lake.LakeTable.deleteRecursively(p) catch { case _: Exception => () }
+  })
+
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    ownDirs.add(d)
+    d.toString
+  }
 }
 
 abstract class SparkTestBase extends AnyFunSuite {
@@ -23,6 +35,6 @@ abstract class SparkTestBase extends AnyFunSuite {
     s
   }
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh dir under `java.io.tmpdir`, deleted when the JVM exits. */
+  def tmpDir(prefix: String): String = SparkTestBase.tmpDir(prefix)
 }
