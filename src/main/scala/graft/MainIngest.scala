@@ -136,7 +136,16 @@ object MainIngest {
           f"(${events / secs}%.0f events/s); table now at v${snaps.last.version}, " +
           s"segment ${snaps.last.watermarkSegment}")
       }
+      // ingest stops at the first missing segment; the ones after it wait
+      val wm = snaps.lastOption.fold(before.watermarkSegment)(_.watermarkSegment)
+      val waiting = CdcIngest.listSegments(feedDir, spark.sessionState.newHadoopConf())
+        .filter(_._1 > wm)
       spark.stop()
+      if (waiting.nonEmpty) {
+        System.err.println(s"gap in WAL: segment ${wm + 1} is missing; " +
+          s"${waiting.size} later segments (from ${waiting.head._1}) wait for it")
+        sys.exit(1)
+      }
 
     // Structured Streaming front-end: drains the WAL dir via availableNow
     // foreachBatch MERGE (resumable through the checkpoint dir)

@@ -615,9 +615,8 @@ object CdcIngest {
       } else snap.schema
 
 
-    def readTarget(files: Seq[DataFileEntry], dels: Seq[graft.lake.DeleteFileEntry],
-        physical: StructType): DataFrame =
-      table.readFiles(spark, physical, files, dels, snap.renames)
+    def readTarget(files: Seq[DataFileEntry], physical: StructType): DataFrame =
+      table.readFiles(spark, physical, files, snap.deleteFiles, snap.renames)
 
     /** Map incoming source columns forward through the table's rename
       * chain: the decoder always emits the ORIGINAL event-field names, so
@@ -672,7 +671,7 @@ object CdcIngest {
           .observe(obs,
             count(lit(1)).as("winners"),
             sum(when(col("op") === ChangeEvent.OpDelete, 1L).otherwise(0L)).as("deletes"))
-        val tgt = readTarget(snap.files, snap.deleteFiles, physicalOf(schema))
+        val tgt = readTarget(snap.files, physicalOf(schema))
           .repartition(parts, col("url"))
         val files = writeMerged(mergeLww(src, tgt, dataCols))
         val m = obs.get
@@ -713,13 +712,11 @@ object CdcIngest {
           val maxSv = if (stats.isEmpty) 1 else stats.map(_.getAs[Int]("maxSv")).max
           val schema = evolvedSchema(maxSv)
           val dataCols = schema.fieldNames.toSeq
-          val touchedDels = snap.deleteFiles.filter(d => touched.contains(d.bucket))
           // not repartitioned here: the MoR join lets the optimizer
           // broadcast the target (or co-partition it to the winners'
           // url hash); the rewrite below aligns it explicitly
           val target = readTarget(
-            snap.files.filter(f => touched.contains(f.bucket)), touchedDels,
-            physicalOf(schema))
+            snap.files.filter(f => touched.contains(f.bucket)), physicalOf(schema))
           val src = alignToRenames(winners.drop("_n", "_sv", LakeTable.BucketCol))
           val (files, carriedFiles, carriedDels2, newDels2, strategy) =
             if (mor) {
@@ -799,31 +796,24 @@ object CdcIngest {
     if (stageOnly) table.stage(out) else table.commit(out)
   }
 
-  /** WAP step 1: derive and STAGE the next pending batch (the contiguous
-    * run above the watermark, capped at `config.segmentsPerBatch`) without
-    * committing it. Returns None when nothing is pending. */
+  /** WAP step 1: derive and STAGE the next pending batch (the first of
+    * [[pendingBatches]]) without committing it. Returns None when nothing
+    * is pending. */
   def stageNext(
       spark: SparkSession,
       table: LakeTable,
       feedDir: String,
-      config: IngestConfig = IngestConfig()): Option[Snapshot] = {
-    val watermark = table.currentSnapshot().watermarkSegment
-    val pending = listSegments(feedDir, spark.sessionState.newHadoopConf())
-      .dropWhile(_._1 <= watermark)
-    val run = pending.zipWithIndex
-      .takeWhile { case ((id, _), i) => id == watermark + 1 + i }
-      .map { case (s, _) => s }
-      .take(math.max(1, config.segmentsPerBatch))
-    if (run.isEmpty) None
-    else table.stagedSnapshot() match {
-      // idempotent re-stage short-circuit: re-deriving the same batch
-      // would silently re-move identical-content files under the staged
-      // manifest (benign, but the manifest's recorded sizes could drift
-      // by a few parquet-encoding bytes) — return the candidate instead
-      case Some(s) if s.batchId == s"seg${run.head._1}-${run.last._1}" => Some(s)
-      case _ => Some(applyBatch(spark, table, run, config, stageOnly = true))
+      config: IngestConfig = IngestConfig()): Option[Snapshot] =
+    pendingBatches(spark, table, feedDir, config.segmentsPerBatch).headOption.map { run =>
+      table.stagedSnapshot() match {
+        // idempotent re-stage short-circuit: re-deriving the same batch
+        // would silently re-move identical-content files under the staged
+        // manifest (benign, but the manifest's recorded sizes could drift
+        // by a few parquet-encoding bytes) — return the candidate instead
+        case Some(s) if s.batchId == s"seg${run.head._1}-${run.last._1}" => s
+        case _ => applyBatch(spark, table, run, config, stageOnly = true)
+      }
     }
-  }
 
   /** WAP step 2: audit the staged candidate's VISIBLE state (live rows as
     * a reader would see them after publish) without publishing. Checks the
@@ -910,8 +900,7 @@ object CdcIngest {
     // delete-aware read: compaction FOLDS stacked merge-on-read deltas —
     // the rewritten buckets come out as pure base and their equality-delete
     // files drop out of the new snapshot below
-    val all = table.readFiles(spark, physical, srcFiles,
-      snap.deleteFiles.filter(d => targetBuckets(d.bucket)), snap.renames)
+    val all = table.readFiles(spark, physical, srcFiles, snap.deleteFiles, snap.renames)
     val kept = tombstoneBefore match {
       case Some(h) => all.filter(!col(LakeTable.DeletedCol) || col("warc_ts") >= lit(h))
       case None    => all
@@ -1179,9 +1168,7 @@ object CdcIngest {
       nameTag: String = ""): Seq[graft.lake.DeleteFileEntry] = {
     val touchedFiles = snap.files.filter(f => touched.contains(f.bucket))
     if (touchedFiles.isEmpty) return Seq.empty
-    val keyOnly = StructType(Seq(StructField("url", StringType)))
-    val existing = spark.read.schema(keyOnly)
-      .parquet(touchedFiles.map(f => table.root.resolve(f.path).toString): _*)
+    val existing = table.scan(spark, LakeTable.DeleteFileSchema, touchedFiles)
       .select(col("url"),
         col("_metadata.file_name").as("_dfname"),
         col("_metadata.row_index").as("_dpos"))
@@ -1192,8 +1179,7 @@ object CdcIngest {
     val priorDv = snap.deleteFiles.filter(d =>
       touched.contains(d.bucket) && d.kind == graft.lake.DeleteFileEntry.Positional)
     if (priorDv.nonEmpty) {
-      val prior = spark.read.schema(LakeTable.DvFileSchema)
-        .parquet(priorDv.map(f => table.root.resolve(f.path).toString): _*)
+      val prior = table.scan(spark, LakeTable.DvFileSchema, priorDv)
       val small = priorDv.map(_.rows).sum <= LakeTable.BroadcastDeleteRows
       dvRows = dvRows.join(if (small) broadcast(prior) else prior,
         Seq("_dfname", "_dpos"), "left_anti")
@@ -1421,19 +1407,30 @@ object CdcIngest {
     }.sortBy(_._1)
   }
 
-  /** Ingest all WAL segments newer than the table's checkpoint, in batches.
-    * Safe to call repeatedly / after a crash: the watermark in the latest
-    * committed snapshot is the checkpoint. Returns committed snapshots. */
+  /** The pending work of every front-end ([[run]], [[stageNext]],
+    * [[StreamingIngest]]): the segments of `feedDir` that directly follow
+    * the table's watermark, in chunks of `segmentsPerBatch`. The run stops
+    * at the first missing segment; the segments after it wait until it
+    * lands, so no batch is ever planned across a hole. */
+  private[ingest] def pendingBatches(spark: SparkSession, table: LakeTable,
+      feedDir: String, segmentsPerBatch: Int): Seq[Seq[(Long, String)]] = {
+    require(segmentsPerBatch > 0, s"segmentsPerBatch must be positive, got $segmentsPerBatch")
+    val watermark = table.currentSnapshot().watermarkSegment
+    listSegments(feedDir, spark.sessionState.newHadoopConf())
+      .dropWhile(_._1 <= watermark).zipWithIndex
+      .takeWhile { case ((id, _), i) => id == watermark + 1 + i }
+      .map(_._1).grouped(segmentsPerBatch).toSeq
+  }
+
+  /** Ingest the WAL segments that follow the table's checkpoint, in
+    * batches ([[pendingBatches]]). Safe to call repeatedly / after a
+    * crash: the watermark in the latest committed snapshot is the
+    * checkpoint. Returns committed snapshots. */
   def run(
       spark: SparkSession,
       table: LakeTable,
       feedDir: String,
-      config: IngestConfig = IngestConfig()): Seq[Snapshot] = {
-    val watermark = table.currentSnapshot().watermarkSegment
-    val pending = listSegments(feedDir, spark.sessionState.newHadoopConf())
-      .filter(_._1 > watermark)
-    pending.grouped(config.segmentsPerBatch).map { batch =>
-      applyBatch(spark, table, batch, config)
-    }.toSeq
-  }
+      config: IngestConfig = IngestConfig()): Seq[Snapshot] =
+    pendingBatches(spark, table, feedDir, config.segmentsPerBatch)
+      .map(applyBatch(spark, table, _, config))
 }

@@ -38,13 +38,6 @@ import graft.lake.LakeTable
   */
 object StreamingIngest {
 
-  /** List `feedDir` for WAL segments, driver-side (cheap: one listStatus).
-    * Delegates to [[CdcIngest.listSegments]] — ONE scheme-agnostic Hadoop-FS
-    * lister shared by the streaming and batch front-ends. */
-  private def listSegments(
-      spark: SparkSession, feedDir: String): Seq[(Long, String)] =
-    CdcIngest.listSegments(feedDir, spark.sessionState.newHadoopConf())
-
   /** Run a streaming ingest over `feedDir`. With [[Trigger.AvailableNow]]
     * (the default) this drains everything currently in the directory and
     * stops — the replay-from-WAL shape; a processing-time trigger tails the
@@ -126,30 +119,22 @@ object StreamingIngest {
   }
 
   /** Apply the contiguous run of on-disk segments above the table
-    * watermark (if any), chunked by `config.segmentsPerBatch` exactly like
-    * the batch front-end (`CdcIngest.run` groups the same way) — a
-    * trigger that finds a 10k-segment backlog must NOT hand the whole
-    * backlog to applyBatch as one unbounded batch: the config's
-    * memory/shuffle bound would be silently void and the commit history
-    * (one snapshot per N segments) would diverge from the batch
-    * front-end's for the same config. Returns true if any batch was
-    * applied. Crash-safe at every chunk boundary: each applyBatch commits
-    * its own watermark, so a kill mid-backlog resumes at the next chunk. */
+    * watermark (if any) in the batch front-end's chunks
+    * ([[CdcIngest.pendingBatches]]) — a trigger that finds a 10k-segment
+    * backlog must NOT hand the whole backlog to applyBatch as one
+    * unbounded batch: the config's memory/shuffle bound would be silently
+    * void and the commit history (one snapshot per N segments) would
+    * diverge from the batch front-end's for the same config. Returns true
+    * if any batch was applied. Crash-safe at every chunk boundary: each
+    * applyBatch commits its own watermark, so a kill mid-backlog resumes
+    * at the next chunk. */
   private def applyContiguous(
       spark: SparkSession,
       table: LakeTable,
       feedDir: String,
       config: IngestConfig): Boolean = {
-    val watermark = table.currentSnapshot().watermarkSegment
-    val pending = listSegments(spark, feedDir).dropWhile(_._1 <= watermark)
-    val run = pending.zipWithIndex
-      .takeWhile { case ((id, _), i) => id == watermark + 1 + i }
-      .map(_._1)
-    // UNCLAMPED like the batch front-end (CdcIngest.run groups the same
-    // way): both front-ends must behave identically for the same config,
-    // including throwing on a non-positive segmentsPerBatch
-    run.grouped(config.segmentsPerBatch)
-      .foreach(chunk => CdcIngest.applyBatch(spark, table, chunk, config))
-    run.nonEmpty
+    val batches = CdcIngest.pendingBatches(spark, table, feedDir, config.segmentsPerBatch)
+    batches.foreach(CdcIngest.applyBatch(spark, table, _, config))
+    batches.nonEmpty
   }
 }

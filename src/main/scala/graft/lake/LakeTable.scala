@@ -4,7 +4,12 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,6 +22,15 @@ import org.apache.spark.sql.types._
   * for a column simply omit it and are never pruned on it. */
 final case class ColStat(typ: String, min: String, max: String)
 
+/** What a lake read needs of a manifest entry, data or delete: the file,
+  * its recorded byte size, its bucket and the commit that added it. */
+sealed trait FileEntry {
+  def path: String
+  def bucket: Int
+  def sizeBytes: Long
+  def addedVersion: Long
+}
+
 /** One data file in a snapshot manifest. `tsMinMicros`/`tsMaxMicros` are
   * file-level zone-map statistics for `warc_ts` (micros since epoch,
   * min/max over non-null values), harvested from the parquet footer during
@@ -27,7 +41,7 @@ final case class ColStat(typ: String, min: String, max: String)
   * never a wrong one. */
 final case class DataFileEntry(path: String, bucket: Int, rows: Long, sizeBytes: Long = 0L,
     tsMinMicros: Option[Long] = None, tsMaxMicros: Option[Long] = None,
-    addedVersion: Long = 0L, colStats: Map[String, ColStat] = Map.empty)
+    addedVersion: Long = 0L, colStats: Map[String, ColStat] = Map.empty) extends FileEntry
 
 /** A merge-on-read delete file, in one of two formats:
   *
@@ -51,7 +65,7 @@ final case class DataFileEntry(path: String, bucket: Int, rows: Long, sizeBytes:
   * it) is byte-for-byte unchanged. */
 final case class DeleteFileEntry(path: String, bucket: Int, rows: Long,
     sizeBytes: Long, addedVersion: Long,
-    kind: String = DeleteFileEntry.Equality)
+    kind: String = DeleteFileEntry.Equality) extends FileEntry
 
 object DeleteFileEntry {
   val Equality = "equality"
@@ -484,25 +498,21 @@ final class LakeTable(val root: Path) {
     * [[changeDeltas]] — sees one visible row per key regardless of how
     * many MoR deltas are stacked. */
   def readRaw(spark: SparkSession, snap: Snapshot, buckets: Option[Set[Int]] = None): DataFrame = {
-    val (sel, dels) = buckets match {
-      case Some(bs) => (snap.files.filter(f => bs.contains(f.bucket)),
-        snap.deleteFiles.filter(d => bs.contains(d.bucket)))
-      case None => (snap.files, snap.deleteFiles)
-    }
-    readFiles(spark, physicalSchema(snap), sel, dels, snap.renames)
+    val sel = buckets.fold(snap.files)(bs => snap.files.filter(f => bs.contains(f.bucket)))
+    readFiles(spark, physicalSchema(snap), sel, snap.deleteFiles, snap.renames)
   }
 
-  /** Read an explicit data-file selection through `schema`, applying
-    * merge-on-read delete files of both kinds:
+  /** Read an explicit data-file selection through `schema` in ONE scan
+    * ([[scan]]), applying the merge-on-read delete files of the selected
+    * buckets (the others cannot hold a key or a position of the
+    * selection) as one anti-join per delete kind:
     *
-    *   - equality: a delete file at `addedVersion` dv removes its keys from
-    *     every data file with `addedVersion < dv` (never from its own
-    *     commit's data file). Between compactions only a handful of
-    *     distinct addedVersions exist, so the union below has few legs.
-    *   - positional (deletion vectors): an anti-join on the exact
-    *     (`file_name`, `row_index`) pairs the vectors name — no version
-    *     arithmetic and no key-width cost (file identity comes free from
-    *     the parquet reader's `_metadata` columns, selected per scan leg).
+    *   - equality: one scan of every delete file, each key tagged with its
+    *     file's `addedVersion` dv; a key removes the data rows whose file's
+    *     `_av < dv` (never its own commit's data file).
+    *   - positional (deletion vectors): the exact (`file_name`,
+    *     `row_index`) pairs the vectors name, matched against the data
+    *     scan's `_metadata` columns — no version arithmetic.
     *
     * Either delete side is trickle-sized and broadcast (under
     * [[BroadcastDeleteRows]] rows) so the data side stays a plain scan —
@@ -532,52 +542,39 @@ final class LakeTable(val root: Path) {
         }
       }.toSeq: _*)
     }
-    if (sel.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val selBuckets = sel.map(_.bucket).toSet
-    val minAv = sel.map(_.addedVersion).min
-    val (pos0, eq0) = dels.partition(_.kind == DeleteFileEntry.Positional)
-    val eqDels = eq0.filter(d => selBuckets.contains(d.bucket) && d.addedVersion > minAv)
-    // a vector never references its own commit's files, so bucket overlap
-    // is the only applicability test positional deletes need
-    val posDels = pos0.filter(d => selBuckets.contains(d.bucket))
-    if (eqDels.isEmpty && posDels.isEmpty)
-      return spark.read.schema(schema).parquet(sel.map(f => root.resolve(f.path).toString): _*)
-    def leg(fs: Seq[DataFileEntry], av: Long): DataFrame = {
-      var df = spark.read.schema(schema)
-        .parquet(fs.map(f => root.resolve(f.path).toString): _*)
-      if (posDels.nonEmpty)
-        df = df.withColumn("_fname", col("_metadata.file_name"))
-          .withColumn("_pos", col("_metadata.row_index"))
-      if (eqDels.nonEmpty) df = df.withColumn("_av", lit(av))
-      df
-    }
-    var data =
-      if (eqDels.isEmpty) leg(sel, 0L)
-      else sel.groupBy(_.addedVersion).toSeq
-        .map { case (av, fs) => leg(fs, av) }.reduce(_ unionByName _)
+    val selBuckets = sel.iterator.map(_.bucket).toSet
+    val (posDels, eqDels) = dels.filter(d => selBuckets(d.bucket))
+      .partition(_.kind == DeleteFileEntry.Positional)
+    def small(ds: Seq[DeleteFileEntry], df: DataFrame): DataFrame =
+      if (ds.map(_.rows).sum <= LakeTable.BroadcastDeleteRows) broadcast(df) else df
+    var data = scan(spark, schema, sel)
     if (posDels.nonEmpty) {
-      val dv = spark.read.schema(LakeTable.DvFileSchema)
-        .parquet(posDels.map(f => root.resolve(f.path).toString): _*)
-      val small = posDels.map(_.rows).sum <= LakeTable.BroadcastDeleteRows
-      data = data.join(if (small) broadcast(dv) else dv,
-          data("_fname") === dv("_dfname") && data("_pos") === dv("_dpos"),
-          "left_anti")
+      val dv = small(posDels, scan(spark, LakeTable.DvFileSchema, posDels))
+      data = data.withColumn("_fname", col("_metadata.file_name"))
+        .withColumn("_pos", col("_metadata.row_index"))
+        .join(dv, col("_fname") === dv("_dfname") && col("_pos") === dv("_dpos"), "left_anti")
         .drop("_fname", "_pos")
     }
     if (eqDels.nonEmpty) {
-      val delDf = eqDels.groupBy(_.addedVersion).toSeq.map { case (dv, fs) =>
-        spark.read.schema(LakeTable.DeleteFileSchema)
-          .parquet(fs.map(f => root.resolve(f.path).toString): _*)
-          .select(col("url").as("_durl")).withColumn("_dv", lit(dv))
-      }.reduce(_ unionByName _)
-      val small = eqDels.map(_.rows).sum <= LakeTable.BroadcastDeleteRows
-      data = data.join(if (small) broadcast(delDf) else delDf,
-          data("url") === col("_durl") && col("_dv") > col("_av"), "left_anti")
-        .drop("_av")
+      val keys = small(eqDels, scan(spark, LakeTable.DeleteFileSchema, eqDels)
+        .select(col("url").as("_durl"), col(AvCol).as("_dv")))
+      data = data.join(keys, data("url") === col("_durl") && col("_dv") > data(AvCol),
+        "left_anti")
     }
-    data
+    data.drop(AvCol)
   }
+
+  /** The one scan every lake-file read goes through: the files of
+    * `entries` through `schema` (a column a file lacks reads as null, a
+    * narrower physical type is upcast) plus `_av`, the `addedVersion` of
+    * each row's entry. The file list comes from the manifest
+    * ([[ManifestIndex]]): no directory listing, no per-file stat. Every
+    * column is read as nullable, as `spark.read.schema(…)` reads it. */
+  private[graft] def scan(spark: SparkSession, schema: StructType,
+      entries: Seq[FileEntry]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestIndex(root, entries),
+      AvSchema, StructType(schema.fields.map(_.copy(nullable = true))), None,
+      new ParquetFileFormat, Map.empty)(spark))
 
   /** Live rows, user schema only (tombstones and system columns dropped). */
   def read(spark: SparkSession): DataFrame = liveRows(spark, currentSnapshot())
@@ -831,15 +828,8 @@ final class LakeTable(val root: Path) {
     val cols = snap.schema.fieldNames.map(col).toSeq
     def inst(us: Long) = java.time.Instant.ofEpochSecond(
       Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
-    val sel = filesInRange(snap, loMicros, hiMicros)
-    // delete keys apply per url, so every delete file of the selected
-    // buckets applies even when some of its bucket's data files are pruned
-    // (bucket SET, not a per-delete-file scan of the selection — trickle
-    // tables stack hundreds of delete files against thousands of data
-    // files and the quadratic filter was pure driver planning waste)
-    val selBuckets = sel.iterator.map(_.bucket).toSet
-    val raw = readFiles(spark, physicalSchema(snap), sel,
-      snap.deleteFiles.filter(d => selBuckets(d.bucket)), snap.renames)
+    val raw = readFiles(spark, physicalSchema(snap), filesInRange(snap, loMicros, hiMicros),
+      snap.deleteFiles, snap.renames)
     raw.filter(!col(DeletedCol) &&
         col("warc_ts") >= lit(inst(loMicros)) && col("warc_ts") <= lit(inst(hiMicros)))
       .select(cols: _*)
@@ -877,10 +867,8 @@ final class LakeTable(val root: Path) {
       lo: Option[String], hi: Option[String]): DataFrame = {
     val snap = currentSnapshot()
     val cols = snap.schema.fieldNames.map(col).toSeq
-    val sel = filesInColRange(snap, column, lo, hi)
-    val selBuckets = sel.iterator.map(_.bucket).toSet
-    val raw = readFiles(spark, physicalSchema(snap), sel,
-      snap.deleteFiles.filter(d => selBuckets(d.bucket)), snap.renames)
+    val raw = readFiles(spark, physicalSchema(snap), filesInColRange(snap, column, lo, hi),
+      snap.deleteFiles, snap.renames)
     val dt = snap.schema(column).dataType
     val c = col(column)
     val live = raw.filter(!col(DeletedCol))
@@ -1179,6 +1167,10 @@ object LakeTable {
   val SeqCol = "_seq"
   val DeletedCol = "_deleted"
   val BucketCol = "_bucket"
+  /** The partition column of every lake scan ([[LakeTable.scan]]): the
+    * `addedVersion` of the manifest entry a row was read from. */
+  private[lake] val AvCol = "_av"
+  private[lake] val AvSchema = StructType(Seq(StructField(AvCol, LongType, nullable = false)))
   /** Total order within one [[ColStat]] comparison domain. Strings compare
     * in unsigned UTF-8 BYTE order — the order the parquet footer's binary
     * min/max stats were selected in AND the order Spark's residual filter
@@ -1274,8 +1266,8 @@ object LakeTable {
   }
 
   /** Bucket assignment — pure function of the key so it never needs to be
-    * stored: `pmod(hash(url), numBuckets)` (north rule's salted url-hash
-    * partitioning of the lake layout). Uses Spark's murmur3 `hash` so that
+    * stored: `pmod(hash(url), numBuckets)` (the url-hash partitioning of
+    * the lake layout). Uses Spark's murmur3 `hash` so that
     * when the MERGE join runs with `repartition(P, url)` for a divisor P of
     * `numBuckets`, Spark's HashPartitioning index is the bucket id mod P
     * (partition = bucket mod P) — every bucket sits whole in one
@@ -1396,4 +1388,33 @@ object LakeTable {
       case d: Double => n.put(k, d)
       case other     => n.put(k, String.valueOf(other))
     }
+}
+
+/** The file list of one lake scan, built from manifest entries: each
+  * entry's path and recorded size make its `FileStatus` (the files are
+  * immutable, so the manifest's size is the file's), and its
+  * `addedVersion` is the value of the one partition column `_av`, so a
+  * filter on `_av` prunes whole versions. Nothing is listed or stat'd. */
+private final class ManifestIndex(root: Path, entries: Seq[FileEntry]) extends FileIndex {
+  private val byVersion: Seq[(Long, Array[FileStatus])] =
+    entries.groupBy(_.addedVersion).toSeq.sortBy(_._1).map { case (av, es) =>
+      av -> es.map(e => new FileStatus(e.sizeBytes, false, 1, 0L, 0L,
+        new HPath(root.resolve(e.path).toUri))).toArray
+    }
+  def rootPaths: Seq[HPath] = byVersion.flatMap(_._2.map(_.getPath))
+  def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    // the planner leaves partition filters to the index (they are not
+    // re-applied after the scan); `_av` is the only partition column, so
+    // every attribute in them is slot 0
+    val keep = partitionFilters.reduceOption(And).map(f => Predicate.createInterpreted(
+      f.transform { case _: AttributeReference => BoundReference(0, LongType, nullable = false) }))
+    byVersion.collect { case (av, fs) if keep.forall(_.eval(InternalRow(av))) =>
+      PartitionDirectory(InternalRow(av), fs)
+    }
+  }
+  def inputFiles: Array[String] = rootPaths.map(_.toString).toArray
+  def refresh(): Unit = ()
+  def sizeInBytes: Long = entries.iterator.map(_.sizeBytes).sum
+  def partitionSchema: StructType = LakeTable.AvSchema
 }

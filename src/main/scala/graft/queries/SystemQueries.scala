@@ -1,6 +1,7 @@
 package graft.queries
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -469,6 +470,46 @@ object SystemQueries {
   val TruthDir = "/tmp/graft-cdc-truth"
   private val TruthGlob = s"$TruthDir/*.parquet"
 
+  /** Fingerprint of a build of the engine at `location` (the classes
+    * directory or jar its classes load from): a sha-256 prefix over the
+    * name and bytes of every class file under `graft/`, or over a jar's
+    * bytes. Equal builds of equal sources give equal fingerprints. */
+  private[graft] def buildFingerprint(location: java.nio.file.Path): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    if (Files.isDirectory(location)) {
+      val st = Files.walk(location.resolve("graft"))
+      val classes = try st.iterator().asScala.filter(Files.isRegularFile(_)).toVector
+        finally st.close()
+      classes.map(p => location.relativize(p).toString).sorted.foreach { rel =>
+        md.update(rel.getBytes("UTF-8"))
+        md.update(Files.readAllBytes(location.resolve(rel)))
+      }
+    } else md.update(Files.readAllBytes(location))
+    md.digest().take(16).map("%02x".format(_)).mkString
+  }
+
+  /** [[buildFingerprint]] of the engine running in this JVM, computed once. */
+  private[graft] lazy val EngineFingerprint: String = buildFingerprint(java.nio.file.Paths.get(
+    classOf[LakeTable].getProtectionDomain.getCodeSource.getLocation.toURI))
+
+  /** Build a fixed-path fixture under `root` unless its `_graft_spec`
+    * marker says that this engine build already built it from `spec`. A
+    * rebuild deletes `root` first and writes the marker last, so a build
+    * that dies half-way is redone by the next call. The engine is part of
+    * the key because the cdc_* oracles check tables the engine wrote: a
+    * fixture left by an older build would put that build under the check. */
+  private[graft] def cachedFixture(root: java.nio.file.Path, spec: String,
+      engine: String = EngineFingerprint)(build: => Unit): Unit = synchronized {
+    val marker = root.resolve("_graft_spec")
+    val sig = s"$spec|engine=$engine"
+    if (!(Files.exists(marker) && new String(Files.readAllBytes(marker), "UTF-8") == sig)) {
+      LakeTable.deleteRecursively(root)
+      Files.createDirectories(root)
+      build
+      Files.write(marker, sig.getBytes("UTF-8"))
+    }
+  }
+
   /** One truth row per generated change event (html omitted: no oracle
     * reads it — the text byte-identity invariant is carried by `text`). */
   final case class TruthEvent(
@@ -478,26 +519,21 @@ object SystemQueries {
 
   /** Write the truth stream (+ the engine's bucket assignment of each url —
     * a pure function of the key, so exposing it lets the lineage oracle
-    * group by bucket) to [[TruthDir]]. Skip-if-current via a spec
-    * fingerprint marker rather than blind overwrite: each of the three
-    * cdc_* queries calls this, and an overwrite invalidates the part files
-    * under any still-lazy plan reading the directory (observed as
-    * FAILED_READ_FILE in the mirror spec). The marker also invalidates a
-    * stale dump if the spec or row shape ever changes. */
-  private def writeTruth(s: SparkSession): Unit = synchronized {
-    val marker = java.nio.file.Paths.get(TruthDir, "_graft_spec")
-    val sig = s"$CdcSpec|buckets=$CdcBuckets|shape=v1"
-    if (Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == sig) return
-    import s.implicits._
-    val rows = FeedGen.events(CdcSpec).map(e => TruthEvent(e.op, e.seq, e.url,
-      e.warcTs, e.lang, Option(e.text), e.fetch_status, e.content_len,
-      e.schemaVersion)).toSeq
-    s.createDataset(rows).toDF()
-      .withColumn("bucket", LakeTable.bucketExpr(CdcBuckets))
-      .coalesce(1).write.mode("overwrite").parquet(TruthDir)
-    Files.write(marker, sig.getBytes("UTF-8"))
-  }
+    * group by bucket) to [[TruthDir]]. Skip-if-current ([[cachedFixture]])
+    * rather than blind overwrite: each of the three cdc_* queries calls
+    * this, and an overwrite invalidates the part files under any
+    * still-lazy plan reading the directory (observed as FAILED_READ_FILE
+    * in the mirror spec). */
+  private def writeTruth(s: SparkSession): Unit =
+    cachedFixture(java.nio.file.Paths.get(TruthDir), s"$CdcSpec|buckets=$CdcBuckets|shape=v1") {
+      import s.implicits._
+      val rows = FeedGen.events(CdcSpec).map(e => TruthEvent(e.op, e.seq, e.url,
+        e.warcTs, e.lang, Option(e.text), e.fetch_status, e.content_len,
+        e.schemaVersion)).toSeq
+      s.createDataset(rows).toDF()
+        .withColumn("bucket", LakeTable.bucketExpr(CdcBuckets))
+        .coalesce(1).write.mode("overwrite").parquet(TruthDir)
+    }
 
   /** Fixed-path MERGE-ON-READ replay table for the metadata-table queries
     * ([[LakeTable.filesDf]]/[[LakeTable.snapshotsDf]]): their DuckDB oracle
@@ -505,31 +541,26 @@ object SystemQueries {
     * so the table must live at a path the static oracle SQL can name.
     * MoR (segmentsPerBatch = 1) so the manifest carries every entry kind —
     * bulk and mor commit strategies, stacked equality-delete files from
-    * several versions, and zone-map'd data files. Skip-if-current via the
-    * same spec-fingerprint marker discipline as [[writeTruth]]. */
+    * several versions, and zone-map'd data files. Skip-if-current
+    * ([[cachedFixture]]). */
   private val MetaRoot = "/tmp/graft-cdc-metatable"
-  private def metaTable(s: SparkSession): LakeTable = synchronized {
-    val root = java.nio.file.Paths.get(MetaRoot)
-    val marker = root.resolve("_graft_spec")
-    // v2: sharded-manifest snapshot format (manifest list + per-bucket
-    // manifest files); v3: MoR delta data files are their own equality
-    // deletes — regenerate the fixed-path table on format change
-    val sig = s"$CdcSpec|buckets=$CdcBuckets|mor-meta-v3"
-    if (Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8") == sig)
-      return LakeTable.load(root.resolve("table").toString)
-    LakeTable.deleteRecursively(root)
-    Files.createDirectories(root)
-    val feedDir = root.resolve("feed").toString
-    FeedGen.writeSegments(CdcSpec, feedDir)
-    val table = LakeTable.create(root.resolve("table").toString,
-      CdcIngest.PagesSchemaV1, numBuckets = CdcBuckets)
-    withSizedShuffle(s, sizeOf(feedDir)) {
-      CdcIngest.run(s, table, feedDir, IngestConfig(numBuckets = CdcBuckets,
-        segmentsPerBatch = 1, mergeOnRead = true))
+  private def metaTable(s: SparkSession): LakeTable =
+    fixtureTable(s, MetaRoot, "mor-meta-v3", IngestConfig(numBuckets = CdcBuckets,
+      segmentsPerBatch = 1, mergeOnRead = true))
+
+  /** The [[CdcSpec]] feed replayed with `cfg` into the fixed-path table
+    * `<root>/table`, built once per engine build ([[cachedFixture]]). */
+  private def fixtureTable(s: SparkSession, root: String, tag: String,
+      cfg: IngestConfig): LakeTable = {
+    val dir = java.nio.file.Paths.get(root)
+    cachedFixture(dir, s"$CdcSpec|buckets=$CdcBuckets|$tag") {
+      val feedDir = dir.resolve("feed").toString
+      FeedGen.writeSegments(CdcSpec, feedDir)
+      val table = LakeTable.create(dir.resolve("table").toString,
+        CdcIngest.PagesSchemaV1, numBuckets = CdcBuckets)
+      withSizedShuffle(s, sizeOf(feedDir))(CdcIngest.run(s, table, feedDir, cfg))
     }
-    Files.write(marker, sig.getBytes("UTF-8"))
-    table
+    LakeTable.load(dir.resolve("table").toString)
   }
 
   /** Replay the deterministic binary feed into a fresh lake table through
@@ -732,26 +763,9 @@ object SystemQueries {
     finalState(s, table)
   }
 
-  private def dvTable(s: SparkSession): LakeTable = synchronized {
-    val root = java.nio.file.Paths.get(DvRoot)
-    val marker = root.resolve("_graft_spec")
-    val sig = s"$CdcSpec|buckets=$CdcBuckets|mor-dv-v1"
-    if (Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8") == sig)
-      return LakeTable.load(root.resolve("table").toString)
-    LakeTable.deleteRecursively(root)
-    Files.createDirectories(root)
-    val feedDir = root.resolve("feed").toString
-    FeedGen.writeSegments(CdcSpec, feedDir)
-    val table = LakeTable.create(root.resolve("table").toString,
-      CdcIngest.PagesSchemaV1, numBuckets = CdcBuckets)
-    withSizedShuffle(s, sizeOf(feedDir)) {
-      CdcIngest.run(s, table, feedDir, IngestConfig(numBuckets = CdcBuckets,
-        segmentsPerBatch = 1, mergeOnRead = true, deleteVectors = true))
-    }
-    Files.write(marker, sig.getBytes("UTF-8"))
-    table
-  }
+  private def dvTable(s: SparkSession): LakeTable =
+    fixtureTable(s, DvRoot, "mor-dv-v1", IngestConfig(numBuckets = CdcBuckets,
+      segmentsPerBatch = 1, mergeOnRead = true, deleteVectors = true))
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "strm_hourly" -> ((s, dir) => strmHourly(s, dir)),

@@ -112,6 +112,30 @@ class IngestSpec extends SparkTestBase {
     assertMatchesOracle(table, spec)
   }
 
+  test("one pending-batch planner: every front-end applies 0..2 of a {0,1,2,4} feed") {
+    val spec = FeedSpec(seed = 29L, numEvents = 1250, numUrls = 100, eventsPerSegment = 250)
+    val feed = tmpDir("holefeed")
+    Files.delete(FeedGen.writeSegments(spec, feed)(3))
+    val cfg = IngestConfig(numBuckets = 8, segmentsPerBatch = 2)
+    val batch = mkTable()
+    assert(CdcIngest.run(spark, batch, feed, cfg).map(_.batchId) == Seq("seg0-1", "seg2-2"))
+    val streamed = mkTable()
+    graft.ingest.StreamingIngest.run(spark, streamed, feed, cfg)
+    val staged = mkTable()
+    assert(CdcIngest.stageNext(spark, staged, feed, cfg.copy(segmentsPerBatch = 4))
+      .map(_.batchId).contains("seg0-2"))
+    staged.publishStaged()
+    Seq(batch, streamed, staged).foreach(t => assert(t.currentSnapshot().watermarkSegment == 2))
+    val states = Seq(batch, streamed, staged)
+      .map(_.read(spark).select("url", "warc_ts", "text").collect().toSet)
+    assert(states.distinct.size == 1 && states.head.nonEmpty)
+    // one bound on the batch size for every front-end
+    Seq[IngestConfig => Any](CdcIngest.run(spark, mkTable(), feed, _),
+        CdcIngest.stageNext(spark, mkTable(), feed, _)).foreach { f =>
+      intercept[IllegalArgumentException](f(cfg.copy(segmentsPerBatch = 0)))
+    }
+  }
+
   test("exactly-once: crash between data write and commit, then resume") {
     val spec = FeedSpec(seed = 5L, numEvents = 2000, numUrls = 200, eventsPerSegment = 500)
     val table = mkTable()

@@ -269,6 +269,39 @@ class PlanSpec extends SparkTestBase {
     assert(n == 0, s"a delete-aware read must add no shuffle, found $n:\n$plan")
   }
 
+  test("MoR reads: one data scan for any number of versions, one scan per delete kind") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val spec = FeedSpec(seed = 93L, numEvents = 3000, numUrls = 300, eventsPerSegment = 500)
+    val dir = tmpDir("scanplanfeed")
+    val segs = FeedGen.writeSegments(spec, dir).zipWithIndex
+      .map { case (p, i) => i.toLong -> p.toString }
+    val table = LakeTable.create(tmpDir("scanplantbl"), CdcIngest.PagesSchemaV1, 8)
+    val mor = IngestConfig(mergeOnRead = true)
+    // a bulk base, three stacked equality-delete commits, one vector commit
+    segs.take(4).foreach(sg => CdcIngest.applyBatch(spark, table, Seq(sg), mor))
+    CdcIngest.applyBatch(spark, table, segs.slice(4, 5), mor.copy(deleteVectors = true))
+    val snap = table.currentSnapshot()
+    assert(snap.files.map(_.addedVersion).distinct.size >= 4 &&
+      snap.deleteFiles.map(_.kind).distinct.size == 2, "setup: stacked versions of both kinds")
+    /** (data, equality, vector) scans in the final plan */
+    def scans(df: DataFrame): (Int, Int, Int) = {
+      df.collect()
+      val kinds = aqe.collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.relation.dataSchema.fieldNames.toSeq
+      }
+      (kinds.count(_.contains(LakeTable.SeqCol)), kinds.count(_ == Seq("url")),
+        kinds.count(_.contains("_dfname")))
+    }
+    assert(scans(table.read(spark)) == ((1, 1, 1)), "read")
+    // a key whose bucket holds delete files of both kinds
+    val both = snap.deleteFiles.groupBy(_.bucket).collect {
+      case (b, ds) if ds.map(_.kind).distinct.size == 2 => b
+    }.toSet
+    val url = FeedGen.events(spec).map(_.url)
+      .find(u => both(LakeTable.bucketOf(u, 8))).getOrElse(fail("no bucket with both kinds"))
+    assert(scans(table.lookup(spark, Seq(url))) == ((1, 1, 1)), "lookup")
+  }
+
   test("dd_url_canon: per-row canonicalization + one aggregation, no joins") {
     val plan = planString(SparkEntry.queries("dd_url_canon")(spark, sf))
     assert(!plan.contains("Join"), s"url canon must not join:\n$plan")

@@ -30,6 +30,36 @@ class QueriesSpec extends SparkTestBase {
     assert(df.columns.contains("text_fp"))
   }
 
+  test("fixed-path oracle fixtures are rebuilt when the engine build changes") {
+    import java.nio.file.{Files, Paths}
+    import graft.queries.SystemQueries.{buildFingerprint, cachedFixture}
+    val root = Paths.get(tmpDir("fixture"), "f")
+    var builds = 0
+    def build(spec: String, engine: String): Unit = cachedFixture(root, spec, engine) {
+      builds += 1
+      Files.write(root.resolve(s"b$builds"), Array.emptyByteArray)
+    }
+    build("spec", "e1")
+    build("spec", "e1")
+    assert(builds == 1, "the same spec and engine build reuse the fixture")
+    build("spec", "e2")
+    assert(builds == 2, "a new engine build rebuilds it")
+    assert(!Files.exists(root.resolve("b1")), "a rebuild starts from an empty dir")
+    build("spec2", "e2")
+    assert(builds == 3, "a new spec rebuilds it")
+    // the fingerprint follows the bytes of the class files under graft/
+    val classes = Paths.get(tmpDir("classes"))
+    val cls = Files.createDirectories(classes.resolve("graft/lake")).resolve("A.class")
+    Files.write(cls, Array[Byte](1))
+    val before = buildFingerprint(classes)
+    assert(buildFingerprint(classes) == before)
+    Files.write(classes.resolve("other.txt"), Array[Byte](1))
+    assert(buildFingerprint(classes) == before, "only graft/ classes count")
+    Files.write(cls, Array[Byte](2))
+    assert(buildFingerprint(classes) != before)
+    assert(graft.queries.SystemQueries.EngineFingerprint.length == 32)
+  }
+
   test("spot: cdc queries match an in-JVM mirror of their DuckDB oracle") {
     import org.apache.spark.sql.expressions.Window
     // the queries dump the generator's truth event stream to TruthDir; the
