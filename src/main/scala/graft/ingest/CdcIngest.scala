@@ -32,7 +32,9 @@ import graft.model.ChangeEvent
   *  4. MERGE — full-outer join against ONLY the touched buckets' files
   *     (manifest-driven partition pruning); last-writer-wins vs the target
   *     on (warc_ts, _seq); deletes become tombstones so later-arriving
-  *     older versions still lose;
+  *     older versions still lose. A merge-on-read commit writes only the
+  *     changed rows; with deletion vectors it also writes the positions
+  *     of the target rows they matched, taken from the same join;
   *  5. atomic commit — data files + snapshot + checkpoint watermark +
   *     per-bucket lineage + metrics all become visible via ONE atomic
   *     rename of the snapshot JSON (exactly-once; idempotent on replay).
@@ -77,19 +79,21 @@ object CdcIngest {
       // deltas back to pure base. At 100 TB this turns a 1000-event batch
       // touching 500 buckets from a ~500-bucket rewrite into ~1000 rows of
       // writes — the write-amplification lever; the read-time cost is one
-      // broadcast anti-join until the next compaction. Bulk batches (and
-      // the first load into an empty table) still take the full-merge path.
+      // broadcast anti-join until the next compaction. Only the first load
+      // into an empty table takes the full-merge path; every later batch,
+      // whatever its size, is a merge-on-read commit.
       mergeOnRead: Boolean = false,
       // With mergeOnRead: write POSITIONAL deletion vectors (Iceberg v3 /
       // Delta DV analog) instead of equality-delete keys — the commit
       // records the exact (file, row) positions it supersedes. Write cost:
-      // one extra column-pruned scan of the touched buckets (url + file
-      // metadata only) to locate the positions; read benefit: the delete
-      // anti-join keys on (file, pos) with no per-row key equality against
-      // stacked predicates and no addedVersion arithmetic, and vectors
-      // stay MINIMAL (each physical position is recorded at most once,
-      // ever — see the prior-vector anti-join in applyBatch). The two
-      // formats coexist in one manifest; compaction folds both.
+      // the merge's target read also reads each row's file name and row
+      // index, and a second write of the changed rows' matched positions
+      // from the same persisted frame; read benefit: the delete anti-join
+      // keys on (file, pos) with no per-row key equality against stacked
+      // predicates and no addedVersion arithmetic, and vectors stay
+      // MINIMAL (the target holds only visible rows, so each physical
+      // position is recorded at most once, ever). The two formats coexist
+      // in one manifest; compaction folds both.
       deleteVectors: Boolean = false)
 
   /** User-facing v1 schema of the pages lake table (BASELINE.json:input_hint). */
@@ -566,23 +570,10 @@ object CdcIngest {
     // rows — see KeyAgg), so the former per-segment header READ — ~800
     // driver-serial file opens per bulk batch at the 16M-event bench
     // feed — reduces to metadata-only status calls for the size test.
-    val batchBytes = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // BOUNDED fan-out (64 concurrent calls): an unbounded
-      // Future.sequence over a 100k-segment backfill would be a
-      // file-handle/memory risk; per-group barriers cost nothing at ~ms
-      // per status call.
-      segments.iterator.grouped(64).flatMap { g =>
-        Await.result(
-          Future.sequence(g.map { case (_, p) => Future {
-            val hp = new org.apache.hadoop.fs.Path(p)
-            hp.getFileSystem(hconf).getFileStatus(hp).getLen
-          }}),
-          Duration.Inf)
-      }.sum
-    }
+    val batchBytes = LakeTable.driverFanOut(segments) { case (_, p) =>
+      val hp = new org.apache.hadoop.fs.Path(p)
+      hp.getFileSystem(hconf).getFileStatus(hp).getLen
+    }.sum
 
     // Adaptive merge strategy: a bulk batch (comparable in size to the
     // table) touches ~every bucket — the pre-pass to find touched buckets
@@ -615,8 +606,10 @@ object CdcIngest {
       } else snap.schema
 
 
-    def readTarget(files: Seq[DataFileEntry], physical: StructType): DataFrame =
-      table.readFiles(spark, physical, files, snap.deleteFiles, snap.renames)
+    def readTarget(files: Seq[DataFileEntry], schema: StructType,
+        positions: Boolean = false): DataFrame =
+      table.readFiles(spark, LakeTable.physicalSchema(schema), files, snap.deleteFiles,
+        snap.renames, positions)
 
     /** Map incoming source columns forward through the table's rename
       * chain: the decoder always emits the ORIGINAL event-field names, so
@@ -671,7 +664,7 @@ object CdcIngest {
           .observe(obs,
             count(lit(1)).as("winners"),
             sum(when(col("op") === ChangeEvent.OpDelete, 1L).otherwise(0L)).as("deletes"))
-        val tgt = readTarget(snap.files, physicalOf(schema))
+        val tgt = readTarget(snap.files, schema)
           .repartition(parts, col("url"))
         val files = writeMerged(mergeLww(src, tgt, dataCols))
         val m = obs.get
@@ -714,9 +707,11 @@ object CdcIngest {
           val dataCols = schema.fieldNames.toSeq
           // not repartitioned here: the MoR join lets the optimizer
           // broadcast the target (or co-partition it to the winners'
-          // url hash); the rewrite below aligns it explicitly
+          // url hash); the rewrite below aligns it explicitly. A vector
+          // commit reads each target row's position with it.
+          val dv = mor && config.deleteVectors
           val target = readTarget(
-            snap.files.filter(f => touched.contains(f.bucket)), physicalOf(schema))
+            snap.files.filter(f => touched.contains(f.bucket)), schema, positions = dv)
           val src = alignToRenames(winners.drop("_n", "_sv", LakeTable.BucketCol))
           val (files, carriedFiles, carriedDels2, newDels2, strategy) =
             if (mor) {
@@ -726,22 +721,16 @@ object CdcIngest {
               val winnerRows = stats.map(_.getAs[Long]("winners")).sum
               val deltaNdv = math.max(MinDeltaBloomNdv,
                 2L * winnerRows / math.max(1, touched.size))
-              val changed = morChangedRows(src, target, dataCols)
-              if (config.deleteVectors) {
+              val changed = morChangedRows(src, target, dataCols, positions = dv)
+              if (dv) {
+                // the data write and the vector write read one persisted frame
                 val cached = changed.persist(StorageLevel.MEMORY_AND_DISK)
                 try {
-                  // the vector write overlaps the data write from a second
-                  // thread so its tasks back-fill the data write's tail; the
-                  // winner count bounds the changed rows for its broadcast
-                  import scala.concurrent.{Await, Future}
-                  import scala.concurrent.duration.Duration
-                  import scala.concurrent.ExecutionContext.Implicits.global
-                  val dvFut = Future(writeDeletionVectors(
-                    spark, table, snap, cached, touched, numBuckets,
-                    newVersion, winnerRows, wapTag))
-                  val dataFiles = writeMerged(cached, deltaNdv)
+                  val dataFiles = writeMerged(
+                    cached.drop("_dfname", "_dpos"), deltaNdv)
                   (dataFiles, snap.files, snap.deleteFiles,
-                    Await.result(dvFut, Duration.Inf), "mor-dv")
+                    writeDeletionVectors(spark, table, cached, numBuckets, parts,
+                      newVersion, wapTag, deltaNdv), "mor-dv")
                 } finally cached.unpersist()
               } else {
                 // a delta file holds exactly the commit's changed keys, so it
@@ -896,7 +885,7 @@ object CdcIngest {
     val snap = table.currentSnapshot()
     val targetBuckets = buckets.getOrElse((0 until snap.numBuckets).toSet)
     val srcFiles = snap.files.filter(f => targetBuckets(f.bucket))
-    val physical = physicalOf(snap.schema)
+    val physical = LakeTable.physicalSchema(snap.schema)
     // delete-aware read: compaction FOLDS stacked merge-on-read deltas —
     // the rewritten buckets come out as pure base and their equality-delete
     // files drop out of the new snapshot below
@@ -998,7 +987,7 @@ object CdcIngest {
     // delete-aware read: the full rewrite folds any stacked MoR deltas, so
     // the new layout starts with pure base files and no delete files
     val newFiles = writeBucketFiles(spark, table,
-      table.readFiles(spark, physicalOf(snap.schema), snap.files, snap.deleteFiles,
+      table.readFiles(spark, LakeTable.physicalSchema(snap.schema), snap.files, snap.deleteFiles,
         snap.renames),
       newBuckets, alignedPartitions(spark, newBuckets, snap.files.map(_.sizeBytes).sum),
       snap.version + 1, "-rb" + java.util.UUID.randomUUID().toString.take(8),
@@ -1058,9 +1047,12 @@ object CdcIngest {
     * output is bounded by the batch, never by the touched buckets' size.
     * A winning delete becomes a tombstone row (payload nulls, warc_ts
     * kept), preserving the cross-batch late-loser semantics of the
-    * rewrite path verbatim. */
+    * rewrite path verbatim. With `positions`, the target carries the
+    * [[LakeTable.readFiles]] position columns, and each changed row keeps
+    * its matched target row's position as `_dfname`/`_dpos` (null for a
+    * new key): the row a deletion vector must supersede. */
   private[ingest] def morChangedRows(source: DataFrame, target: DataFrame,
-      dataCols: Seq[String]): DataFrame = {
+      dataCols: Seq[String], positions: Boolean = false): DataFrame = {
     val s = source.alias("s")
     val t = target.alias("t")
     val joined = s.join(t, col("s.url") === col("t.url"), "left_outer")
@@ -1076,7 +1068,10 @@ object CdcIngest {
            else when(isDel, lit(null)).otherwise(col(s"s.$c"))).as(c)
         } :+
         col("s.seq").as(LakeTable.SeqCol) :+
-        isDel.as(LakeTable.DeletedCol): _*)
+        isDel.as(LakeTable.DeletedCol) :++
+        (if (positions) Seq(col(s"t.${LakeTable.FileNameCol}").as("_dfname"),
+          col(s"t.${LakeTable.RowIndexCol}").as("_dpos"))
+        else Nil): _*)
   }
 
   /** The partition count of every bucket-aligned exchange: the smallest
@@ -1140,63 +1135,35 @@ object CdcIngest {
     moveDataFiles(spark, table, tmpDir, version, nameTag)
   }
 
-  /** Locate and record the exact (file, row) positions a MoR-DV commit
-    * supersedes (Iceberg v3 deletion-vector / Delta DV analog). One
-    * column-pruned scan of the touched buckets' existing files (url plus
-    * the parquet reader's free `_metadata` file identity) is semi-joined
-    * against the batch's changed keys (broadcast — trickle-sized), then
-    * anti-joined against the PRIOR vectors of the same buckets so each
-    * physical position is recorded at most once ever: without that, a
-    * hot url updated every batch would re-record its long-dead base-file
-    * position each time and the vector stack would grow O(batches). The
-    * same property keeps the read-time anti-join input minimal. Returns
-    * the new vector files, bucket-partitioned like every delete file.
-    * Not written through [[writeBucketFiles]]: it runs on a second thread
-    * while the data write is still running, and that writer's
-    * [[withMicrosTimestamps]] sets and restores a session-wide setting —
-    * a second caller would race the restore and could leave the data
-    * files in INT96 with no zone maps. */
+  /** Record the exact (file, row) positions a MoR-DV commit supersedes
+    * (Iceberg v3 deletion-vector / Delta DV analog): the `_dfname`/`_dpos`
+    * of every `changed` row that matched a target row ([[morChangedRows]]
+    * with positions). The target is the touched buckets' visible rows, so
+    * each position is the one row of its url that no prior delete hides,
+    * and no position is ever recorded twice: without that, a hot url
+    * updated every batch would re-record its long-dead base-file position
+    * each time and the vector stack would grow O(batches). Each vector
+    * row keeps its `url`, which places it in its bucket; the write goes
+    * through [[writeBucketFiles]] like the data write. Returns the new
+    * vector files, bucket-partitioned like every delete file. */
   private def writeDeletionVectors(
       spark: SparkSession,
       table: LakeTable,
-      snap: Snapshot,
       changed: DataFrame,
-      touched: Set[Int],
       numBuckets: Int,
+      partitions: Int,
       newVersion: Long,
-      changedRows: Long,
-      nameTag: String = ""): Seq[graft.lake.DeleteFileEntry] = {
-    val touchedFiles = snap.files.filter(f => touched.contains(f.bucket))
-    if (touchedFiles.isEmpty) return Seq.empty
-    val existing = table.scan(spark, LakeTable.DeleteFileSchema, touchedFiles)
-      .select(col("url"),
-        col("_metadata.file_name").as("_dfname"),
-        col("_metadata.row_index").as("_dpos"))
-    val keys = changed.select("url").distinct()
-    var dvRows = existing.join(
-      if (changedRows <= LakeTable.BroadcastDeleteRows) broadcast(keys) else keys,
-      Seq("url"), "left_semi")
-    val priorDv = snap.deleteFiles.filter(d =>
-      touched.contains(d.bucket) && d.kind == graft.lake.DeleteFileEntry.Positional)
-    if (priorDv.nonEmpty) {
-      val prior = table.scan(spark, LakeTable.DvFileSchema, priorDv)
-      val small = priorDv.map(_.rows).sum <= LakeTable.BroadcastDeleteRows
-      dvRows = dvRows.join(if (small) broadcast(prior) else prior,
-        Seq("_dfname", "_dpos"), "left_anti")
-    }
-    val dvTmp = table.root.resolve(s".tmp-dv-${java.util.UUID.randomUUID()}")
-    dvRows
-      .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(numBuckets))
-      .select("_dfname", "_dpos", LakeTable.BucketCol)
-      .write.partitionBy(LakeTable.BucketCol).mode("overwrite")
-      .parquet(dvTmp.toString)
-    moveDataFiles(spark, table, dvTmp, newVersion, s"$nameTag-dv")
+      nameTag: String,
+      bloomNdv: Long): Seq[graft.lake.DeleteFileEntry] =
+    writeBucketFiles(spark, table,
+      changed.filter(col("_dfname").isNotNull).select("url", "_dfname", "_dpos"),
+      numBuckets, partitions, newVersion, s"$nameTag-dv", maxFileRows = 0L,
+      bloomNdv = bloomNdv)
       .map(f => graft.lake.DeleteFileEntry(f.path, f.bucket, f.rows, f.sizeBytes,
         newVersion, kind = graft.lake.DeleteFileEntry.Positional))
-  }
 
-  /** Move spark's partitioned output ([[writeBucketFiles]], the vector
-    * write) into the table's data dir under version-scoped names; row
+  /** Move spark's partitioned output ([[writeBucketFiles]]) into the
+    * table's data dir under version-scoped names; row
     * counts come from parquet footers (metadata only — no extra Spark
     * job). `nameTag` must be non-empty for any write that can RACE the
     * ingest path to the same target version (compaction): two writers
@@ -1211,10 +1178,7 @@ object CdcIngest {
       .filter(p => p.getFileName.toString.startsWith(s"${LakeTable.BucketCol}="))
     // parallel: footer reads are ~10ms each and there can be hundreds of
     // buckets — serial moves were showing up as per-batch driver stalls
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val entryFutures = bucketDirs.map { bd => Future {
+    val entries = LakeTable.driverFanOut(bucketDirs) { bd =>
       val bucket = bd.getFileName.toString.stripPrefix(s"${LakeTable.BucketCol}=").toInt
       val parts = LakeTable.listDir(bd)
         .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
@@ -1227,8 +1191,7 @@ object CdcIngest {
           tsRange.map(_._1), tsRange.map(_._2), addedVersion = version,
           colStats = colStats)
       }
-    }}
-    val entries = Await.result(Future.sequence(entryFutures), Duration.Inf).flatten
+    }.flatten
     LakeTable.deleteRecursively(tmpDir)
     entries
   }
@@ -1363,23 +1326,13 @@ object CdcIngest {
     * Spark's default INT96: INT96 is deprecated, statistics-less (so no
     * zone maps and no parquet row-group pruning on `warc_ts`), and larger
     * on disk. Session-scoped set/restore — [[writeBucketFiles]] is the
-    * only caller and runs one write at a time per session. */
+    * only caller. */
   private def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "TIMESTAMP_MICROS")
     try body finally spark.conf.set(key, prev)
   }
-
-  /** Read-time physical schema: the logical columns plus the engine's
-    * system columns (`_seq` LWW order, `_deleted` tombstone) — ONE
-    * construction for every read that feeds [[writeBucketFiles]], so the
-    * physical layout of the files it writes cannot drift (the write
-    * side's non-null variant lives in [[LakeTable.physicalSchema]]). */
-  private def physicalOf(schema: StructType): StructType =
-    StructType(schema.fields ++ Array(
-      StructField(LakeTable.SeqCol, LongType),
-      StructField(LakeTable.DeletedCol, BooleanType)))
 
   // -------------------------------------------------------------------
   // driver loop: resumable from checkpoint (= the snapshot watermark)

@@ -210,19 +210,12 @@ final class LakeTable(val root: Path) {
     val node = Mapper.readTree(bytes)
     // sharded format (current writer): the snapshot carries a manifest
     // LIST; entries live in immutable per-bucket manifest files, loaded
-    // through the cache (bounded parallel for a cold many-bucket read).
+    // through the cache ([[driverFanOut]] for a cold many-bucket read).
     // Legacy inline format (pre-shard snapshots) still parses below.
     val refs = parseManifestRefs(node)
     val (files, deleteFiles) =
       if (refs.nonEmpty || node.get("files") == null) {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val loaded = refs.iterator.grouped(64).flatMap { g =>
-          Await.result(
-            Future.sequence(g.map(r => Future(loadManifest(r.path)))),
-            Duration.Inf)
-        }.toSeq
+        val loaded = driverFanOut(refs)(r => loadManifest(r.path))
         (loaded.flatMap(_._1), loaded.flatMap(_._2))
       } else (
         node.get("files").elements().asScala.map(parseDataEntry).toSeq,
@@ -484,12 +477,6 @@ final class LakeTable(val root: Path) {
     }
   }
 
-  /** Schema including system columns, as stored in data files. */
-  def physicalSchema(s: Snapshot): StructType =
-    StructType(s.schema.fields ++ Array(
-      StructField(SeqCol, LongType, nullable = false),
-      StructField(DeletedCol, BooleanType, nullable = false)))
-
   /** Read raw rows (incl. tombstones + system cols) of the given buckets;
     * `buckets = None` reads everything. Missing evolved columns in old
     * files are null-filled by the explicit read schema. Merge-on-read
@@ -499,7 +486,7 @@ final class LakeTable(val root: Path) {
     * many MoR deltas are stacked. */
   def readRaw(spark: SparkSession, snap: Snapshot, buckets: Option[Set[Int]] = None): DataFrame = {
     val sel = buckets.fold(snap.files)(bs => snap.files.filter(f => bs.contains(f.bucket)))
-    readFiles(spark, physicalSchema(snap), sel, snap.deleteFiles, snap.renames)
+    readFiles(spark, physicalSchema(snap.schema), sel, snap.deleteFiles, snap.renames)
   }
 
   /** Read an explicit data-file selection through `schema` in ONE scan
@@ -518,10 +505,16 @@ final class LakeTable(val root: Path) {
     * [[BroadcastDeleteRows]] rows) so the data side stays a plain scan —
     * no shuffle is added to any read path. Compaction folds the deltas and
     * clears the delete files, which is the maintenance lever that bounds
-    * both stacks. */
+    * both stacks.
+    *
+    * `positions = true` keeps each surviving row's position as two more
+    * columns, [[FileNameCol]] (the data file's basename) and [[RowIndexCol]]
+    * (its row index) — what a deletion-vector commit records for the rows
+    * it supersedes. */
   def readFiles(spark: SparkSession, schema: StructType,
       sel: Seq[DataFileEntry], dels: Seq[DeleteFileEntry],
-      renames: Map[String, Seq[String]] = Map.empty): DataFrame = {
+      renames: Map[String, Seq[String]] = Map.empty,
+      positions: Boolean = false): DataFrame = {
     // Rename-aware wrapper (zero-cost when no live rename touches this
     // schema): files written before a rename carry the OLD physical column
     // name and null-fill the current one, so the read widens its schema
@@ -535,12 +528,13 @@ final class LakeTable(val root: Path) {
         formers.map(a => StructField(a, schema(cur).dataType, nullable = true))
       }
       val wide = StructType(schema.fields ++ aliasFields)
-      return readFiles(spark, wide, sel, dels).select(schema.fields.map { f =>
-        live.get(f.name) match {
-          case Some(formers) => coalesce((f.name +: formers).map(col): _*).as(f.name)
-          case None          => col(f.name)
-        }
-      }.toSeq: _*)
+      return readFiles(spark, wide, sel, dels, positions = positions).select(
+        schema.fields.toSeq.map { f =>
+          live.get(f.name) match {
+            case Some(formers) => coalesce((f.name +: formers).map(col): _*).as(f.name)
+            case None          => col(f.name)
+          }
+        } ++ (if (positions) Seq(col(FileNameCol), col(RowIndexCol)) else Nil): _*)
     }
     val selBuckets = sel.iterator.map(_.bucket).toSet
     val (posDels, eqDels) = dels.filter(d => selBuckets(d.bucket))
@@ -548,12 +542,13 @@ final class LakeTable(val root: Path) {
     def small(ds: Seq[DeleteFileEntry], df: DataFrame): DataFrame =
       if (ds.map(_.rows).sum <= LakeTable.BroadcastDeleteRows) broadcast(df) else df
     var data = scan(spark, schema, sel)
+    if (positions || posDels.nonEmpty)
+      data = data.withColumn(FileNameCol, col("_metadata.file_name"))
+        .withColumn(RowIndexCol, col("_metadata.row_index"))
     if (posDels.nonEmpty) {
       val dv = small(posDels, scan(spark, LakeTable.DvFileSchema, posDels))
-      data = data.withColumn("_fname", col("_metadata.file_name"))
-        .withColumn("_pos", col("_metadata.row_index"))
-        .join(dv, col("_fname") === dv("_dfname") && col("_pos") === dv("_dpos"), "left_anti")
-        .drop("_fname", "_pos")
+      data = data.join(dv,
+        col(FileNameCol) === dv("_dfname") && col(RowIndexCol) === dv("_dpos"), "left_anti")
     }
     if (eqDels.nonEmpty) {
       val keys = small(eqDels, scan(spark, LakeTable.DeleteFileSchema, eqDels)
@@ -561,7 +556,7 @@ final class LakeTable(val root: Path) {
       data = data.join(keys, data("url") === col("_durl") && col("_dv") > data(AvCol),
         "left_anti")
     }
-    data.drop(AvCol)
+    if (positions) data.drop(AvCol) else data.drop(AvCol, FileNameCol, RowIndexCol)
   }
 
   /** The one scan every lake-file read goes through: the files of
@@ -828,7 +823,7 @@ final class LakeTable(val root: Path) {
     val cols = snap.schema.fieldNames.map(col).toSeq
     def inst(us: Long) = java.time.Instant.ofEpochSecond(
       Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
-    val raw = readFiles(spark, physicalSchema(snap), filesInRange(snap, loMicros, hiMicros),
+    val raw = readFiles(spark, physicalSchema(snap.schema), filesInRange(snap, loMicros, hiMicros),
       snap.deleteFiles, snap.renames)
     raw.filter(!col(DeletedCol) &&
         col("warc_ts") >= lit(inst(loMicros)) && col("warc_ts") <= lit(inst(hiMicros)))
@@ -867,7 +862,7 @@ final class LakeTable(val root: Path) {
       lo: Option[String], hi: Option[String]): DataFrame = {
     val snap = currentSnapshot()
     val cols = snap.schema.fieldNames.map(col).toSeq
-    val raw = readFiles(spark, physicalSchema(snap), filesInColRange(snap, column, lo, hi),
+    val raw = readFiles(spark, physicalSchema(snap.schema), filesInColRange(snap, column, lo, hi),
       snap.deleteFiles, snap.renames)
     val dt = snap.schema(column).dataType
     val c = col(column)
@@ -1185,13 +1180,24 @@ object LakeTable {
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
+  /** The position columns of [[LakeTable.readFiles]]`(positions = true)`. */
+  val FileNameCol = "_fname"
+  val RowIndexCol = "_pos"
+  /** Schema including system columns, as stored in data files: the
+    * logical columns plus `_seq` (LWW order) and `_deleted` (tombstone). */
+  def physicalSchema(schema: StructType): StructType =
+    StructType(schema.fields ++ Array(
+      StructField(SeqCol, LongType, nullable = false),
+      StructField(DeletedCol, BooleanType, nullable = false)))
   /** Read schema of an equality-delete file: just the key. */
   val DeleteFileSchema: StructType =
     StructType(Seq(StructField("url", StringType, nullable = false)))
   /** Read schema of a positional deletion-vector file: the superseded
     * row's data-file BASENAME (version-scoped names are unique within a
     * table, and basenames survive a table move) and its 0-based row index
-    * as the parquet reader reports it (`_metadata.row_index`). */
+    * as the parquet reader reports it (`_metadata.row_index`). The files
+    * also carry the row's `url`, which places them in its bucket; reads
+    * select only these two columns. */
   val DvFileSchema: StructType = StructType(Seq(
     StructField("_dfname", StringType, nullable = false),
     StructField("_dpos", LongType, nullable = false)))
@@ -1201,6 +1207,18 @@ object LakeTable {
   val BroadcastDeleteRows: Long = 2000000L
   private val SnapName = raw"v(\d+)\.json".r
   private[lake] val Mapper = new ObjectMapper()
+
+  /** The driver fan-out for metadata calls (manifest loads, segment
+    * sizes, the data-file move and footer read): `f` over every item on
+    * the global execution context, results in input order. The calls are
+    * not marked `blocking`, so at most `availableProcessors` of them run
+    * at once, however many items there are. */
+  private[graft] def driverFanOut[A, B](items: Seq[A])(f: A => B): Seq[B] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.traverse(items)(a => Future(f(a))), Duration.Inf)
+  }
 
   /** Eager fd-safe directory listing — `Files.list` holds a directory fd
     * until close(), so dropping the stream leaks one per call. The ONE

@@ -27,27 +27,16 @@ object PipelineQueries {
     s.read.parquet(s"$dir/$name.parquet")
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` derived from the
-    * documents table's size (guide §2.2: size shuffle partitions from the
-    * data, not a constant tuned to one box): ceil(bytes/32 MB), floor 1,
-    * env-tunable target (SPARK_GRAFT_SHUFFLE_TARGET_BYTES). Only for query
-    * bodies that EXECUTE work inside the scope (iterative localCheckpoint
-    * loops, counts, collects) — the conf is restored on exit, so the lazy
-    * tail of the returned plan runs under the session value as before.
-    * The SystemQueries twin covers the streaming/CDC family. */
+  /** [[SystemQueries.withSizedShuffle]] sized from one input table's
+    * `$table.parquet` (one partition when its size cannot be read). Only
+    * for query bodies that EXECUTE work inside the scope (iterative
+    * localCheckpoint loops, counts, collects) — the lazy tail of the
+    * returned plan runs under the session value. */
   private def withSizedShuffle[T](s: SparkSession, dir: String,
-      table: String = "documents")(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val target = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_TARGET_BYTES",
-      (32L * 1024 * 1024).toString).toLong
-    val bytes =
+      table: String = "documents")(body: => T): T =
+    SystemQueries.withSizedShuffle(s,
       try java.nio.file.Files.size(java.nio.file.Paths.get(s"$dir/$table.parquet"))
-      catch { case _: Exception => target }
-    val n = math.max(1L, (bytes + target - 1) / target)
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+      catch { case _: Exception => SystemQueries.ShuffleTargetBytes })(body)
 
   /** md5 hex of a string column (Spark needs an explicit binary cast). */
   private def md5s(c: Column): Column = md5(c.cast("binary"))

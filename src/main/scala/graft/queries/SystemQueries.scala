@@ -78,22 +78,24 @@ object SystemQueries {
     * a KB-sized replay feed or stream slice). partitions =
     * ceil(bytes / target), floor 1, no upper cap — at 100 TB the same rule
     * derives thousands of partitions, so nothing here is tuned to local
-    * mode; target bytes is env-tunable (SPARK_GRAFT_SHUFFLE_TARGET_BYTES,
-    * default 32 MB). Only callers that EXECUTE their work inside `body`
-    * (streaming awaitTermination, engine replays, eager checkpoints) use
-    * this — the conf is restored on exit, so a lazy DataFrame that escapes
-    * the scope would plan with the session value again. For the streaming
-    * queries the value is also the state-store partition count, i.e. the
-    * number of per-micro-batch state commits. */
-  private def withSizedShuffle[T](s: SparkSession, inputBytes: Long)(body: => T): T = {
+    * mode; target is [[ShuffleTargetBytes]]. Only callers that EXECUTE
+    * their work inside `body` (streaming awaitTermination, engine
+    * replays, eager checkpoints, iterative query loops) use this — the
+    * conf is restored on exit, so a lazy DataFrame that escapes the scope
+    * would plan with the session value again. For the streaming queries
+    * the value is also the state-store partition count, i.e. the number
+    * of per-micro-batch state commits. PipelineQueries sizes its query
+    * bodies through this too, from one input table's size. */
+  private[queries] def withSizedShuffle[T](s: SparkSession, inputBytes: Long)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val target = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_TARGET_BYTES",
-      (32L * 1024 * 1024).toString).toLong
-    val n = math.max(1L, (inputBytes + target - 1) / target)
+    val n = math.max(1L, (inputBytes + ShuffleTargetBytes - 1) / ShuffleTargetBytes)
     val prev = s.conf.get(key)
     s.conf.set(key, n.toString)
     try body finally s.conf.set(key, prev)
   }
+
+  /** Input bytes per shuffle partition of [[withSizedShuffle]]. */
+  private[queries] val ShuffleTargetBytes: Long = 32L * 1024 * 1024
 
   /** Total bytes under a path (file or directory, one level). */
   private def sizeOf(path: String): Long = {

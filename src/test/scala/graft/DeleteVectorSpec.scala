@@ -87,6 +87,32 @@ class DeleteVectorSpec extends SparkTestBase {
       s"both delete formats must coexist, got $kinds")
     val expected = FeedGen.expectedState(FeedGen.events(spec))
     assert(state(table) == expected.values.map(e => (e.url, e.warcTs, e.text, e.lang)).toSet)
+    // a vector commit records only rows that were visible before it: no
+    // prior vector covers them and no newer equality delete hides them
+    def positions(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val dvCommits = table.listVersions().sorted.map(table.readSnapshot)
+      .filter(_.metrics.get("strategy").contains("mor-dv"))
+    assert(dvCommits.size == rest.size)
+    dvCommits.foreach { s =>
+      val parent = table.readSnapshot(s.parentVersion)
+      val (vecs, eqs) = parent.deleteFiles.partition(_.kind == DeleteFileEntry.Positional)
+      val eqKeys = table.scan(spark, LakeTable.DeleteFileSchema, eqs)
+        .select(col("url").as("_k"), col("_av").as("_kv"))
+      val unhidden = positions(table.scan(spark,
+          LakeTable.physicalSchema(parent.schema), parent.files)
+        .select(col("_metadata.file_name").as("_f"), col("_metadata.row_index").as("_p"),
+          col("url"), col("_av"))
+        .join(eqKeys, col("url") === col("_k") && col("_kv") > col("_av"), "left_anti")
+        .select("_f", "_p"))
+      val visible = unhidden --
+        positions(table.scan(spark, LakeTable.DvFileSchema, vecs).select("_dfname", "_dpos"))
+      val recorded = positions(table.scan(spark, LakeTable.DvFileSchema,
+        s.deleteFiles.filter(_.addedVersion == s.version)).select("_dfname", "_dpos"))
+      assert(recorded.nonEmpty, s"v${s.version} recorded no vector")
+      assert(recorded.subsetOf(visible),
+        s"v${s.version} recorded rows that were not visible: ${(recorded -- visible).take(5)}")
+    }
   }
 
   test("compaction folds vectors back to pure base; later DV batches re-stack") {

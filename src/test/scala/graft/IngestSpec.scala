@@ -282,7 +282,7 @@ class IngestSpec extends SparkTestBase {
     // tombstones survive a plain compact…
     val physical = LakeTable.SeqCol
     def tombstones(): Long = spark.read
-      .schema(table.physicalSchema(table.currentSnapshot()))
+      .schema(LakeTable.physicalSchema(table.currentSnapshot().schema))
       .parquet(table.currentSnapshot().files.map(f =>
         table.root.resolve(f.path).toString): _*)
       .filter(col(LakeTable.DeletedCol)).count()

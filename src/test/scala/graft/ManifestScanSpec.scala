@@ -39,7 +39,7 @@ class ManifestScanSpec extends SparkTestBase {
     val (table, _) = replay(spec, IngestConfig(mergeOnRead = true, deleteVectors = true))
     val snap = table.currentSnapshot()
     assert(snap.deleteFiles.nonEmpty && snap.files.map(_.addedVersion).distinct.size >= 3)
-    val perFile = table.scan(spark, table.physicalSchema(snap), snap.files)
+    val perFile = table.scan(spark, LakeTable.physicalSchema(snap.schema), snap.files)
       .groupBy(col("_metadata.file_name"), col("_av"))
       .agg(count(lit(1)), max(col("_metadata.row_index")))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -81,9 +81,9 @@ class ManifestScanSpec extends SparkTestBase {
   test("an empty selection is an empty frame with the read schema") {
     val table = LakeTable.create(tmpDir("msempty"), CdcIngest.PagesSchemaV1, 4)
     val snap = table.currentSnapshot()
-    val df = table.readFiles(spark, table.physicalSchema(snap), Seq.empty, Seq.empty)
+    val df = table.readFiles(spark, LakeTable.physicalSchema(snap.schema), Seq.empty, Seq.empty)
     assert(df.schema.map(f => f.name -> f.dataType) ==
-      table.physicalSchema(snap).map(f => f.name -> f.dataType))
+      LakeTable.physicalSchema(snap.schema).map(f => f.name -> f.dataType))
     assert(df.count() == 0)
     assert(table.read(spark).count() == 0 && table.lookup(spark, Seq("https://x/")).count() == 0)
   }

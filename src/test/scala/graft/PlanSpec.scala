@@ -71,40 +71,41 @@ class PlanSpec extends SparkTestBase {
 
   private val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
 
-  /** Run `body` with a write-plan capture: the function it is handed runs
-    * one action and returns the executed plan of the one parquet write
-    * that action issues. A marker write goes first: listener events
-    * arrive in order, so once the marker's arrives no earlier write is
-    * still in flight. */
-  private def capturingWrites[T](body: ((() => Unit) => SparkPlan) => T): T = {
+  /** Every plan `run` executes, in order, each with the output path of
+    * the parquet write it issues ("" for none): a marker write before and
+    * one after bound the listener events that belong to `run`. */
+  private def executedPlans(run: () => Unit): Seq[(String, SparkPlan)] = {
     import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new LinkedBlockingQueue[(String, SparkPlan)]()
     // the write command runs inside AQE's final plan (a result query stage)
-    val writes = new LinkedBlockingQueue[(String, SparkPlan)]()
     val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        aqe.collectFirst(qe.executedPlan) { case w: DataWritingCommandExec => w.cmd }
-          .foreach {
-            case i: InsertIntoHadoopFsRelationCommand =>
-              writes.put((i.outputPath.toString, qe.executedPlan))
-            case _ =>
-          }
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val out = aqe.collectFirst(qe.executedPlan) { case w: DataWritingCommandExec => w.cmd }
+          .collect { case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString }
+        plans.put((out.getOrElse(""), qe.executedPlan))
+      }
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    def writePlan(run: () => Unit): SparkPlan = {
+    def upToMarker(): Seq[(String, SparkPlan)] = {
       val marker = tmpDir("marker")
       spark.range(1).write.mode("overwrite").parquet(marker)
-      Iterator.continually(writes.poll(30, TimeUnit.SECONDS))
-        .find(w => w == null || w._1.endsWith(marker))
-      run()
-      Option(writes.poll(30, TimeUnit.SECONDS)).getOrElse(fail("no write captured"))._2
+      Iterator.continually(Option(plans.poll(30, TimeUnit.SECONDS))
+          .getOrElse(fail("marker write not captured")))
+        .takeWhile(!_._1.endsWith(marker)).toSeq
     }
     spark.listenerManager.register(listener)
-    try body(writePlan _) finally spark.listenerManager.unregister(listener)
+    try { upToMarker(); run(); upToMarker() }
+    finally spark.listenerManager.unregister(listener)
   }
+
+  /** The executed plan of the first parquet write `run` issues. */
+  private def writePlan(run: () => Unit): SparkPlan =
+    executedPlans(run).collectFirst { case (out, plan) if out.nonEmpty => plan }
+      .getOrElse(fail("no write captured"))
 
   private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
     aqe.collect(plan) { case e: ShuffleExchangeExec => e }
@@ -170,51 +171,49 @@ class PlanSpec extends SparkTestBase {
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: aboveJoin(q.plan)
       case _ => n +: n.children.flatMap(aboveJoin)
     }
-    capturingWrites { writePlan =>
-      def commit(name: String, batch: Seq[(Long, String)], strategy: String,
-          cfg: IngestConfig): BaseJoinExec = {
-        val plan = writePlan(() => CdcIngest.applyBatch(spark, table, batch, cfg))
-        assert(table.currentSnapshot().metrics("strategy") == strategy,
-          s"$name: took ${table.currentSnapshot().metrics("strategy")}")
-        val write = aqe.collectFirst(plan) { case w: WriteFilesExec => w }
-          .getOrElse(fail(s"$name: no WriteFiles in:\n$plan"))
-        val join = aqe.collectFirst(write) { case j: BaseJoinExec => j }
-          .getOrElse(fail(s"$name: no join under the write:\n$plan"))
-        assert(!aboveJoin(write).exists(_.isInstanceOf[ShuffleExchangeExec]),
-          s"$name: an exchange sits between the join and the write:\n$plan")
-        shuffles(plan).flatMap(urlHash).foreach(h =>
-          assert(h.numPartitions == p, s"$name: aligned exchange $h, expected $p:\n$plan"))
-        join
-      }
-      // bulk: both inputs hashed into P
-      val bulk = commit("bulk", segs.slice(1, 100), "bulk", IngestConfig())
-      assert(Seq(bulk.left, bulk.right).forall(s => shuffles(s).flatMap(urlHash).size == 1),
-        s"bulk: each merge input must be hashed by url once:\n$bulk")
-      // pruned: the cached winners are already hashed; the target is hashed into P
-      val pruned = commit("pruned", segs.slice(100, 101), "pruned", IngestConfig())
-      assert(shuffles(pruned.left).flatMap(urlHash).size == 1 && shuffles(pruned.right).isEmpty,
-        s"pruned: only the target may be hashed:\n$pruned")
-      // MoR: the optimizer broadcasts the target — no shuffle on either side
-      val mor = commit("mor", segs.slice(101, 102), "mor", IngestConfig(mergeOnRead = true))
-      assert(mor.isInstanceOf[BroadcastHashJoinExec] &&
-        mor.asInstanceOf[BroadcastHashJoinExec].buildSide == BuildRight,
-        s"mor: the target is not the broadcast side:\n$mor")
-      assert(aqe.collect(mor.right) { case b: BroadcastExchangeExec => b }.nonEmpty &&
-        shuffles(mor).isEmpty, s"mor: the target must be broadcast, not shuffled:\n$mor")
-      // MoR with broadcasts off: the target is co-partitioned to the
-      // winners' url hash, once; the cached winners are not re-shuffled
-      val key = "spark.sql.autoBroadcastJoinThreshold"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "-1")
-      val shuffled = try commit("mor, no broadcast", segs.slice(102, 103), "mor",
-        IngestConfig(mergeOnRead = true))
-      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      val tgt = shuffles(shuffled.right)
-      assert(tgt.size == 1 && urlHash(tgt.head).exists(_.numPartitions == p),
-        s"mor, no broadcast: the target needs exactly one hashpartitioning(url, $p):\n$shuffled")
-      assert(shuffles(shuffled.left).isEmpty,
-        s"mor, no broadcast: the winners were re-shuffled:\n$shuffled")
+    def commit(name: String, batch: Seq[(Long, String)], strategy: String,
+        cfg: IngestConfig): BaseJoinExec = {
+      val plan = writePlan(() => CdcIngest.applyBatch(spark, table, batch, cfg))
+      assert(table.currentSnapshot().metrics("strategy") == strategy,
+        s"$name: took ${table.currentSnapshot().metrics("strategy")}")
+      val write = aqe.collectFirst(plan) { case w: WriteFilesExec => w }
+        .getOrElse(fail(s"$name: no WriteFiles in:\n$plan"))
+      val join = aqe.collectFirst(write) { case j: BaseJoinExec => j }
+        .getOrElse(fail(s"$name: no join under the write:\n$plan"))
+      assert(!aboveJoin(write).exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"$name: an exchange sits between the join and the write:\n$plan")
+      shuffles(plan).flatMap(urlHash).foreach(h =>
+        assert(h.numPartitions == p, s"$name: aligned exchange $h, expected $p:\n$plan"))
+      join
     }
+    // bulk: both inputs hashed into P
+    val bulk = commit("bulk", segs.slice(1, 100), "bulk", IngestConfig())
+    assert(Seq(bulk.left, bulk.right).forall(s => shuffles(s).flatMap(urlHash).size == 1),
+      s"bulk: each merge input must be hashed by url once:\n$bulk")
+    // pruned: the cached winners are already hashed; the target is hashed into P
+    val pruned = commit("pruned", segs.slice(100, 101), "pruned", IngestConfig())
+    assert(shuffles(pruned.left).flatMap(urlHash).size == 1 && shuffles(pruned.right).isEmpty,
+      s"pruned: only the target may be hashed:\n$pruned")
+    // MoR: the optimizer broadcasts the target — no shuffle on either side
+    val mor = commit("mor", segs.slice(101, 102), "mor", IngestConfig(mergeOnRead = true))
+    assert(mor.isInstanceOf[BroadcastHashJoinExec] &&
+      mor.asInstanceOf[BroadcastHashJoinExec].buildSide == BuildRight,
+      s"mor: the target is not the broadcast side:\n$mor")
+    assert(aqe.collect(mor.right) { case b: BroadcastExchangeExec => b }.nonEmpty &&
+      shuffles(mor).isEmpty, s"mor: the target must be broadcast, not shuffled:\n$mor")
+    // MoR with broadcasts off: the target is co-partitioned to the
+    // winners' url hash, once; the cached winners are not re-shuffled
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val shuffled = try commit("mor, no broadcast", segs.slice(102, 103), "mor",
+      IngestConfig(mergeOnRead = true))
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val tgt = shuffles(shuffled.right)
+    assert(tgt.size == 1 && urlHash(tgt.head).exists(_.numPartitions == p),
+      s"mor, no broadcast: the target needs exactly one hashpartitioning(url, $p):\n$shuffled")
+    assert(shuffles(shuffled.left).isEmpty,
+      s"mor, no broadcast: the winners were re-shuffled:\n$shuffled")
     // the committed files are bucket-clustered: every physical row sits in
     // a file named for its bucket
     val snap = table.currentSnapshot()
@@ -234,22 +233,20 @@ class PlanSpec extends SparkTestBase {
     FeedGen.writeSegments(spec, dir)
     val table = LakeTable.create(tmpDir("rwplantbl"), CdcIngest.PagesSchemaV1, 8)
     CdcIngest.run(spark, table, dir, IngestConfig(numBuckets = 8, segmentsPerBatch = 1))
-    capturingWrites { writePlan =>
-      Seq[(String, () => Unit)](
-          "compact" -> (() => CdcIngest.compact(spark, table)),
-          "rebucket" -> (() => CdcIngest.rebucket(spark, table, 16))).foreach {
-        case (name, rewrite) =>
-          val plan = writePlan(rewrite)
-          val sorts = aqe.collect(plan) { case s: SortExec => s }
-          assert(shuffles(plan).size == 1,
-            s"$name: expected 1 shuffle, found ${shuffles(plan).size}:\n$plan")
-          assert(sorts.size == 1, s"$name: expected 1 sort, found ${sorts.size}:\n$plan")
-          val keys = sorts.head.sortOrder.map(_.child match {
-            case a: Attribute => a.name
-            case e => e.sql
-          })
-          assert(keys == Seq(LakeTable.BucketCol, "warc_ts", "url"), s"$name sorts by $keys")
-      }
+    Seq[(String, () => Unit)](
+        "compact" -> (() => CdcIngest.compact(spark, table)),
+        "rebucket" -> (() => CdcIngest.rebucket(spark, table, 16))).foreach {
+      case (name, rewrite) =>
+        val plan = writePlan(rewrite)
+        val sorts = aqe.collect(plan) { case s: SortExec => s }
+        assert(shuffles(plan).size == 1,
+          s"$name: expected 1 shuffle, found ${shuffles(plan).size}:\n$plan")
+        assert(sorts.size == 1, s"$name: expected 1 sort, found ${sorts.size}:\n$plan")
+        val keys = sorts.head.sortOrder.map(_.child match {
+          case a: Attribute => a.name
+          case e => e.sql
+        })
+        assert(keys == Seq(LakeTable.BucketCol, "warc_ts", "url"), s"$name sorts by $keys")
     }
   }
 
@@ -300,6 +297,38 @@ class PlanSpec extends SparkTestBase {
     val url = FeedGen.events(spec).map(_.url)
       .find(u => both(LakeTable.bucketOf(u, 8))).getOrElse(fail("no bucket with both kinds"))
     assert(scans(table.lookup(spark, Seq(url))) == ((1, 1, 1)), "lookup")
+  }
+
+  test("DV commit: one scan of the touched data files and one of the prior vectors") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val spec = FeedSpec(seed = 94L, numEvents = 1500, numUrls = 300, eventsPerSegment = 500)
+    val dir = tmpDir("dvscanfeed")
+    val segs = FeedGen.writeSegments(spec, dir).zipWithIndex
+      .map { case (p, i) => i.toLong -> p.toString }
+    val table = LakeTable.create(tmpDir("dvscantbl"), CdcIngest.PagesSchemaV1, 8)
+    val cfg = IngestConfig(mergeOnRead = true, deleteVectors = true)
+    // a bulk base, then a first vector commit
+    segs.take(2).foreach(sg => CdcIngest.applyBatch(spark, table, Seq(sg), cfg))
+    assert(table.currentSnapshot().deleteFiles.map(_.bucket).distinct.size == 8,
+      "setup: every bucket holds a prior vector")
+    val plans = executedPlans(() => CdcIngest.applyBatch(spark, table, segs.slice(2, 3), cfg))
+      .map(_._2)
+    assert(table.currentSnapshot().metrics("strategy") == "mor-dv")
+    // a persisted frame is read by several jobs but computed once: count
+    // the scans of its plan once
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def scans(plan: SparkPlan): Seq[FileSourceScanExec] = aqe.flatMap(plan) {
+      case s: FileSourceScanExec => Seq(s)
+      case m: InMemoryTableScanExec if seen.add(m.relation.cacheBuilder) =>
+        scans(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    val (vectors, data) = plans.flatMap(scans)
+      .partition(_.relation.location.inputFiles.forall(_.contains("-dv-")))
+    assert((data.size, vectors.size) == ((1, 1)),
+      s"(data, vector) scans: ${(data.size, vectors.size)}\n${plans.mkString("\n")}")
   }
 
   test("dd_url_canon: per-row canonicalization + one aggregation, no joins") {
